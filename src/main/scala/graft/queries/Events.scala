@@ -1,9 +1,13 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.QuerySpec
 import graft.io.Tables
 import graft.ops.AsOfJoin
+import graft.streaming.Streams
+import graft.util.Scratch
 
 /** Event-time operator pack (SURVEY.md §2.10): tumbling / sliding / session
   * windows and an as-of enrichment join, expressed as batch plans with
@@ -79,88 +83,34 @@ object Events {
     * equals its single-batch value (watermarks only ever trail the next
     * slice's minimum by the full delay). Range partitioning samples its
     * boundaries — no global single-partition sort — which is the same
-    * replay shape a cluster run uses on a 100 TB table. */
+    * replay shape a cluster run uses on a 100 TB table.
+    *
+    * Maps (session, sf-dir, slices) → (dir, number of NON-EMPTY slice
+    * files written; empty range partitions produce no part file). The
+    * multi-batch gate ([[batchGate]]) is provable only when the fixture
+    * filled every slice. */
   private val slicedDirs = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int), String]()
-  /** Monotonic build id: every (re)build lands in a FRESH directory, so
-    * a `fresh=true` rebuild (or a second session in the same JVM) can
-    * never rewrite OR delete slice files under a stream/checkpoint that
-    * still references the earlier path — earlier builds stay on disk
-    * for the life of the JVM and are removed by the shutdown hook
-    * below (crashed JVMs' leftovers by the age-based sweep at the next
-    * build). */
+    (SparkSession, String, Int), (String, Int)]()
+  /** Monotonic build id, part of the dir name: every (re)build lands in a
+    * FRESH directory, so a `fresh=true` rebuild (or a second session in
+    * the same JVM) can never rewrite OR delete slice files under a
+    * stream/checkpoint that still references the earlier path. Earlier
+    * builds stay on disk for the life of the JVM; [[Scratch.sessionDir]]
+    * registers each for deletion at JVM exit, and [[Scratch.sweepOrphans]]
+    * reclaims a killed JVM's dirs once its PID is dead. */
   private val sliceBuildId = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** slice dir → number of NON-EMPTY slice files written (empty range
-    * partitions produce no part file). The multi-batch invariant below
-    * is gated on this: it is provable only when the fixture filled
-    * every slice. */
-  private val slicePartCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
-  /** Every directory this JVM built, deleted at (clean) JVM exit so
-    * repeated bench/verify/test runs cannot leak RAM-backed tmpfs. */
-  private val builtDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      builtDirs.forEach(d => deleteRecursively(d))
-    }, "graft-sliced-fixture-cleanup"))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
   /** Default 3 slices = the contractual minimum of 3 data micro-batches
-    * (requireMultiBatch): each extra slice re-pays the whole per-batch
+    * ([[batchGate]]): each extra slice re-pays the whole per-batch
     * fixed cost (batch planning + a state-store commit per store
     * instance) across all ~17 consumers without proving anything a
     * third batch doesn't. `events_stream_restart_recovery` alone passes
     * slices=4 — its contract is 2 pre-stop + >= 2 post-restart batches. */
-  private def slicedEventsDir(s: org.apache.spark.sql.SparkSession,
-                              d: String, slices: Int = 3): String =
+  private def slicedFixture(s: SparkSession, d: String,
+                            slices: Int): (String, Int) =
     slicedDirs.computeIfAbsent((s, d, slices), _ => {
-      val base =
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")
-      val prefix =
-        s"graft_events_sliced_${slices}_${Integer.toHexString(d.hashCode)}"
-      // Session+build-unique directory: prefix identifies the fixture,
-      // the session identity hash scopes it to this session, and the
-      // monotonic build id makes every rebuild a new path — earlier
-      // builds are NEVER deleted mid-JVM (a stream or checkpoint may
-      // still reference them); the shutdown hook removes this JVM's
-      // dirs at exit. Leftovers from crashed JVMs (any session token)
-      // and the pre-r10 naming schemes are swept here when stale:
-      // 30 minutes is far beyond any single bench/verify run, and the
-      // sbt project lock keeps concurrent JVMs out of the same repo.
-      val sessTok = Integer.toHexString(System.identityHashCode(s))
-      val preR10 = // the r9 scheme carried no slices segment at all
-        s"graft_events_sliced_${Integer.toHexString(d.hashCode)}"
-      val staleMs = 30L * 60 * 1000
-      val now = System.currentTimeMillis()
-      Option(new java.io.File(base).listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => (f.getName == prefix || f.getName == preR10 ||
-            f.getName.startsWith(s"${prefix}_")) &&
-          now - f.lastModified() > staleMs &&
-          // never sweep THIS JVM's own builds — in a session older than
-          // the stale window, a rebuild would otherwise delete an earlier
-          // build a live stream / restart checkpoint still references,
-          // breaking the never-delete-mid-JVM invariant above
-          !builtDirs.contains(f))
-        .foreach(deleteRecursively)
-      // Name layout ends in _p<pid>_s<sessTok> so Scratch.sweepOrphans'
-      // startup pass reclaims dirs SIGKILLed JVMs leaked (r14 ADVICE:
-      // the 30-min stale sweep above only runs when a later JVM rebuilds
-      // the SAME (d, slices) prefix — orphans for other data dirs used
-      // to persist in /dev/shm indefinitely). The build id stays in the
-      // middle so every rebuild remains a fresh path.
-      val out = new java.io.File(base,
-        s"${prefix}_${sliceBuildId.incrementAndGet()}" +
-          s"_p${graft.util.Scratch.jvmTag}_s$sessTok")
-      builtDirs.add(out)
+      val out = new java.io.File(Scratch.sessionDir(s,
+        slicedFixtureTag(slices, sliceBuildId.incrementAndGet()), d))
       val stage = new java.io.File(out, ".stage") // dot-prefix: invisible
       Tables.events(s, d)                         // to the file source
         .repartitionByRange(slices, col("ts"), col("event_id"))
@@ -171,7 +121,6 @@ object Events {
       // on any filesystem timestamp resolution.
       val parts = Option(stage.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      slicePartCounts.put(out.getPath, parts.length)
       val t0 = System.currentTimeMillis()
       parts.zipWithIndex.foreach { case (p, i) =>
         val dst = new java.io.File(out, f"slice-$i%03d.parquet")
@@ -179,44 +128,94 @@ object Events {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         dst.setLastModified(t0 + i * 1000L)
       }
-      out.getPath
+      (out.getPath, parts.length)
     })
+
+  /** The [[Scratch.sessionDir]] tag of a fixture build. */
+  private[graft] def slicedFixtureTag(slices: Int, build: Long): String =
+    s"events_sliced_${slices}_$build"
+
+  /** Non-empty slices the `slices`-slice fixture of `d` recorded. */
+  private def recordedSlices(s: SparkSession, d: String,
+                             slices: Int = 3): Int =
+    slicedFixture(s, d, slices)._2
+
+  /** The sliced replay source: the `glob`-selected slice files of the
+    * `slices`-slice fixture, one file per micro-batch. */
+  private def slicedEvents(s: SparkSession, d: String,
+                           glob: String = "slice-*.parquet",
+                           slices: Int = 3): DataFrame =
+    s.readStream
+      .schema(Tables.events(s, d).schema)
+      .option("pathGlobFilter", glob)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(slicedFixture(s, d, slices)._1)
 
   /** Benchmark hook: build both sliced replay fixtures (the 3-slice dir
     * every stream query reads and restart-recovery's 4-slice dir) NOW so
     * the build lands in its own timing entry instead of whichever stream
     * query runs first — the same fairness contract as the other shared
     * stages. */
-  def buildSlicedFixtures(s: org.apache.spark.sql.SparkSession,
+  def buildSlicedFixtures(s: SparkSession,
                           d: String, fresh: Boolean = false): Unit = {
     if (fresh) slicedDirs.keySet.removeIf(k => (k._1 eq s) && k._2 == d)
-    slicedEventsDir(s, d); slicedEventsDir(s, d, slices = 4); ()
+    slicedFixture(s, d, 3); slicedFixture(s, d, 4); ()
   }
 
-  /** ≥ 3 observed data micro-batches, or the multi-batch claim is hollow —
+  /** Micro-batches of `q` that read at least one row. */
+  private def dataBatches(q: StreamingQuery): Int =
+    q.recentProgress.count(_.numInputRows > 0)
+
+  /** ≥ `min` observed data batches, or the multi-batch claim is hollow —
     * fail loudly rather than silently degrade to a one-shot drain
     * (the r12 silent-zero-source class). The invariant is a property of
     * REPLAY over a populated fixture, so it is enforced only when the
-    * fixture filled all its slices (`dir`'s recorded non-empty slice
-    * count ≥ 3 — true at every real fixture, where each slice holds
-    * hundreds of rows of every event type). On a degenerate fixture
-    * (empty / single-row events) the batch count is content-dependent —
-    * a filtered source may legitimately ingest zero rows — and the
-    * contract is only that the drain terminates with a defined result. */
-  private def requireMultiBatch(
-      q: org.apache.spark.sql.streaming.StreamingQuery, name: String,
-      dir: String): Unit = {
-    val n = q.recentProgress.count(_.numInputRows > 0)
-    val recorded = slicePartCounts.getOrDefault(dir, 3)
-    if (recorded >= 3)
-      require(n >= 3, s"$name drained in $n data batches, want >= 3")
+    * fixture `recorded` ≥ `min` non-empty slices (true at every real
+    * fixture, where each slice holds hundreds of rows of every event
+    * type). On a degenerate fixture (empty / single-row events) the batch
+    * count is content-dependent — a filtered source may legitimately
+    * ingest zero rows — and the contract is only that the drain
+    * terminates with a defined result. The skip is logged: if a real
+    * fixture ever lands an empty range slice (skew, fixture change), the
+    * multi-batch proof degrading to a no-op shows up in Verify/Bench
+    * logs instead of vanishing. */
+  private[graft] def batchGate(name: String, observed: Int, recorded: Int,
+                               min: Int): Unit =
+    if (recorded >= min)
+      require(observed >= min,
+        s"$name drained in $observed data batches, want >= $min")
     else
-      // A silently-weakened invariant must be visible (r14 ADVICE): if a
-      // real fixture ever lands an empty range slice (skew, fixture
-      // change), the multi-batch proof degrading to a no-op should show
-      // up in Verify/Bench logs, not vanish.
       System.err.println(s"[events] $name: multi-batch gate SKIPPED — " +
-        s"fixture $dir recorded only $recorded non-empty slice(s)")
+        s"fixture recorded only $recorded non-empty slice(s)")
+
+  /** Starts `df` into the memory table `q_<name>` on checkpoint `ckpt`
+    * and waits until it has drained its source (AvailableNow). */
+  private def memorySink(name: String, df: DataFrame, mode: String,
+                         ckpt: String): StreamingQuery = {
+    val q = df.writeStream
+      .outputMode(mode)
+      .format("memory").queryName(s"q_$name")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
+
+  /** The drain shared by the memory-sink stream entries: `df` runs to
+    * completion under [[Streams.drained]] into the memory table of the
+    * entry `name`, which is returned. `gated = Some(d)` declares that
+    * `df` replays `d`'s 3-slice fixture, so the drain must pass
+    * [[batchGate]] at 3 data batches. */
+  private def drainToMemory(s: SparkSession, name: String, df: DataFrame,
+                            mode: String, noDataBatches: Boolean = false,
+                            gated: Option[String] = None): DataFrame = {
+    Streams.drained(s, noDataBatches) { ckpt =>
+      val q = memorySink(name, df, mode, ckpt)
+      gated.foreach(d =>
+        batchGate(name, dataBatches(q), recordedSlices(s, d), 3))
+    }
+    s.table(s"q_$name")
   }
 
   /** Ordered funnel view -> click -> purchase, each step the FIRST
@@ -408,28 +407,19 @@ object Events {
     // terminates after draining the source — deterministic end state.
     "events_tumbling_streaming" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val batchShape = Tables.eventsWithTs(s, d)
         val stream = Tables.eventsStreamSource(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
           // exact decimal state: the streaming sum must be accumulation-
           // order-free for the oracle hash to match
           .withColumn("value", col("value").cast("decimal(25,6)"))
-        val agg = graft.streaming.Streams.tumblingHourly(stream)
-        val sinkName = "q_events_tumbling_streaming"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = agg.writeStream
-            .outputMode("complete")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        val agg = Streams.tumblingHourly(stream)
+        val sunk = drainToMemory(s, "events_tumbling_streaming", agg,
+          "complete")
         // batchShape only anchors the schema contract above; the result
         // comes from the streaming engine's sink table.
         require(batchShape.schema.fieldNames.contains("ts_utc"))
-        s.table(sinkName)
+        sunk
           .select(date_format(col("wstart"), fmt).as("wstart"),
             col("event_type"), col("n"),
             col("total").cast("double").as("total"))
@@ -449,22 +439,12 @@ object Events {
     // drained() runs with noDataBatches = true.
     "events_stream_append_windows" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val stream = Tables.eventsStreamSource(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
           .withColumn("value", col("value").cast("decimal(25,6)"))
-        val agg = graft.streaming.Streams.tumblingHourly(stream)
-        val sinkName = "q_events_stream_append_windows"
-        graft.streaming.Streams.drained(s, noDataBatches = true) { ckpt =>
-          val q = agg.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table(sinkName)
+        val agg = Streams.tumblingHourly(stream)
+        drainToMemory(s, "events_stream_append_windows", agg, "append",
+          noDataBatches = true)
           .select(date_format(col("wstart"), fmt).as("wstart"),
             col("event_type"), col("n"),
             col("total").cast("double").as("total"))
@@ -576,29 +556,13 @@ object Events {
     "events_stream_funnel" -> QuerySpec(
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .select(col("user_id"), col("event_type"),
             expr("ts div 1000").as("tus"))
-          .as[graft.streaming.Streams.FunnelEvent]
-        val progress = graft.streaming.Streams
-          .funnelProgress(stream, 86400000000L)
-        val sinkName = "q_events_stream_funnel"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = progress.toDF().writeStream
-            .outputMode("update")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_funnel", slicedEventsDir(s, d))
-        }
-        val fin = s.table(sinkName)
+          .as[Streams.FunnelEvent]
+        val progress = Streams.funnelProgress(stream, 86400000000L)
+        val fin = drainToMemory(s, "events_stream_funnel", progress.toDF(),
+            "update", gated = Some(d))
           .groupBy("user_id")
           .agg(max(struct(col("folded"), col("t1"), col("t2"), col("t3")))
             .as("m"))
@@ -766,12 +730,7 @@ object Events {
     // over the batch table; state is bounded by the 10-minute watermark.
     "events_stream_dedup" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
           .select(col("user_id"), col("event_type"),
             date_format(date_trunc("minute", col("ts_utc")), fmt).as("minute"),
@@ -780,22 +739,13 @@ object Events {
           .withWatermark("ts_utc", "10 minutes")
           .dropDuplicatesWithinWatermark("user_id", "event_type", "minute")
           .select("user_id", "event_type", "minute")
-        val sinkName = "q_events_stream_dedup"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = deduped.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          // Cross-batch dedup state is genuinely exercised: a key's
-          // duplicates sit within one minute of each other, while the
-          // watermark trails the previous slice's max by 10 minutes — so
-          // a later slice's duplicate always finds the key still in state.
-          requireMultiBatch(q, "events_stream_dedup", slicedEventsDir(s, d))
-        }
-        s.table(sinkName).orderBy("user_id", "event_type", "minute")
+        // Cross-batch dedup state is genuinely exercised: a key's
+        // duplicates sit within one minute of each other, while the
+        // watermark trails the previous slice's max by 10 minutes — so
+        // a later slice's duplicate always finds the key still in state.
+        drainToMemory(s, "events_stream_dedup", deduped, "append",
+          gated = Some(d))
+          .orderBy("user_id", "event_type", "minute")
       },
       """SELECT DISTINCT user_id, event_type,
         |       strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') AS minute
@@ -809,34 +759,20 @@ object Events {
     // result equals the batch interval join the oracle runs.
     "events_stream_join" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        def src = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        def src = slicedEvents(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
-        val joined = graft.streaming.Streams.clickPurchaseJoin(
+        val joined = Streams.clickPurchaseJoin(
             src.filter(col("event_type") === "click"),
             src.filter(col("event_type") === "purchase"),
             intervalMinutes = 30)
           .select(col("c_user"), col("c_event"), col("p_event"), col("p_value"))
-        val sinkName = "q_events_stream_join"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = joined.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          // Join state crosses batches: a purchase buffered in slice k
-          // must still be in state when its click arrives in slice k+1
-          // (watermark trails the click's slice by 10 min, so eviction at
-          // p_ts + 30min + delay can never precede the matching click).
-          requireMultiBatch(q, "events_stream_join", slicedEventsDir(s, d))
-        }
-        s.table(sinkName).orderBy("c_event", "p_event")
+        // Join state crosses batches: a purchase buffered in slice k
+        // must still be in state when its click arrives in slice k+1
+        // (watermark trails the click's slice by 10 min, so eviction at
+        // p_ts + 30min + delay can never precede the matching click).
+        drainToMemory(s, "events_stream_join", joined, "append",
+          gated = Some(d))
+          .orderBy("c_event", "p_event")
       },
       """SELECT c.user_id AS c_user, c.event_id AS c_event,
         |       p.event_id AS p_event, p.value AS p_value
@@ -859,30 +795,15 @@ object Events {
     // COALESCE(p_event, -1).
     "events_stream_left_outer_join" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        def src = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        def src = slicedEvents(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
-        val joined = graft.streaming.Streams.clickPurchaseJoin(
+        val joined = Streams.clickPurchaseJoin(
             src.filter(col("event_type") === "click"),
             src.filter(col("event_type") === "purchase"),
             intervalMinutes = 30, joinType = "leftOuter")
           .select(col("c_user"), col("c_event"), col("p_event"), col("p_value"))
-        val sinkName = "q_events_stream_loj"
-        graft.streaming.Streams.drained(s, noDataBatches = true) { ckpt =>
-          val q = joined.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_left_outer_join", slicedEventsDir(s, d))
-        }
-        s.table(sinkName)
+        drainToMemory(s, "events_stream_left_outer_join", joined, "append",
+          noDataBatches = true, gated = Some(d))
           .orderBy(col("c_event"), coalesce(col("p_event"), lit(-1L)))
       },
       """WITH c AS (
@@ -924,31 +845,16 @@ object Events {
     // defaults, so both sides order by COALESCE of both event ids.
     "events_stream_full_outer_join" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        def src = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        def src = slicedEvents(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
-        val joined = graft.streaming.Streams.clickPurchaseJoin(
+        val joined = Streams.clickPurchaseJoin(
             src.filter(col("event_type") === "click"),
             src.filter(col("event_type") === "purchase"),
             intervalMinutes = 30, joinType = "fullOuter")
           .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
             col("c_event"), col("p_event"), col("p_value"))
-        val sinkName = "q_events_stream_foj"
-        graft.streaming.Streams.drained(s, noDataBatches = true) { ckpt =>
-          val q = joined.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_full_outer_join", slicedEventsDir(s, d))
-        }
-        s.table(sinkName)
+        drainToMemory(s, "events_stream_full_outer_join", joined, "append",
+          noDataBatches = true, gated = Some(d))
           .orderBy(coalesce(col("c_event"), lit(-1L)),
             coalesce(col("p_event"), lit(-1L)))
       },
@@ -998,32 +904,18 @@ object Events {
     // drained result equals the batch join.
     "events_stream_enrich" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val dim = Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment"))
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
         val enriched = stream
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("c_mktsegment").as("segment"), col("value"))
-        val sinkName = "q_events_stream_enrich"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = enriched.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_enrich", slicedEventsDir(s, d))
-        }
-        s.table(sinkName).orderBy("event_id")
+        drainToMemory(s, "events_stream_enrich", enriched, "append",
+          gated = Some(d))
+          .orderBy("event_id")
       },
       """SELECT e.event_id, e.user_id, e.event_type,
         |       c.c_mktsegment AS segment, e.value
@@ -1039,31 +931,16 @@ object Events {
     "events_stream_running_totals" -> QuerySpec(
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .filter(col("user_id") < 100)
           .select(col("user_id"), col("value"))
-          .as[graft.streaming.Streams.UserEvent]
-        val totals = graft.streaming.Streams.runningUserTotals(stream)
-        val sinkName = "q_events_stream_totals"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = totals.toDF().writeStream
-            .outputMode("update")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          // Per-user counts accumulate across batches; max(n) below reads
-          // the final state, so the fold must have carried across slices.
-          requireMultiBatch(q, "events_stream_running_totals", slicedEventsDir(s, d))
-        }
-        // one state row per user per batch; max(n) = the final state
-        s.table(sinkName)
+          .as[Streams.UserEvent]
+        val totals = Streams.runningUserTotals(stream)
+        // Per-user counts accumulate across batches (one state row per
+        // user per batch); max(n) below reads the final state, so the
+        // fold must have carried across slices.
+        drainToMemory(s, "events_stream_running_totals", totals.toDF(),
+            "update", gated = Some(d))
           .groupBy("user_id").agg(max("n").as("n_events"))
           .orderBy("user_id")
       },
@@ -1086,23 +963,13 @@ object Events {
     // field beside the key, else fail loudly.
     "events_stream_state_inspection" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .filter(col("user_id") < 100)
           .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-        val sinkName = "q_events_stream_state_inspection"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = stream.writeStream
-            .outputMode("update").format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_state_inspection", slicedEventsDir(s, d))
+        val name = "events_stream_state_inspection"
+        Streams.drained(s) { ckpt =>
+          val q = memorySink(name, stream, "update", ckpt)
+          batchGate(name, dataBatches(q), recordedSlices(s, d), 3)
           val st = s.read.format("statestore").option("path", ckpt).load()
           val vals = st.select(col("key.user_id").as("user_id"),
             col("value.*"))
@@ -1142,7 +1009,7 @@ object Events {
         // tmpfs litter. Session-scoped (Scratch.sessionDir) so a second
         // concurrent session cannot clear THIS session's landing mid-read.
         val outF = new java.io.File(
-          graft.util.Scratch.sessionDir(s, "fbsink", d))
+          Scratch.sessionDir(s, "fbsink", d))
         if (outF.isDirectory) {
           val walk = java.nio.file.Files.walk(outF.toPath)
           try walk.sorted(java.util.Comparator.reverseOrder())
@@ -1150,18 +1017,14 @@ object Events {
           finally walk.close()
         }
         val out = outF.getPath
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .select(col("event_type"), col("value"))
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = graft.streaming.Streams
-            .startForeachBatchParquet(stream, out, ckpt)
+        val name = "events_stream_batch_sink"
+        Streams.drained(s) { ckpt =>
+          val q = Streams.startForeachBatchParquet(stream, out, ckpt)
           q.processAllAvailable()
           q.stop()
-          requireMultiBatch(q, "events_stream_batch_sink", slicedEventsDir(s, d))
+          batchGate(name, dataBatches(q), recordedSlices(s, d), 3)
         }
         // an empty fixture lands zero batches — the sink dir then has no
         // footers to infer from, so supply the landing schema explicitly
@@ -1174,14 +1037,10 @@ object Events {
             org.apache.spark.sql.types.StructField("batch_id",
               org.apache.spark.sql.types.LongType))))
           .parquet(out)
-        val nBatches = sunk.select("batch_id").distinct().count()
-        if (slicePartCounts.getOrDefault(slicedEventsDir(s, d), 3) >= 3)
-          require(nBatches >= 3,
-            s"foreachBatch sink landed $nBatches batches, want >= 3")
-        else
-          System.err.println("[events] events_stream_batch_sink: " +
-            "multi-batch gate SKIPPED — fixture recorded < 3 non-empty " +
-            "slices")
+        // every drained data batch must have LANDED in the sink too
+        batchGate(s"$name landing",
+          sunk.select("batch_id").distinct().count().toInt,
+          recordedSlices(s, d), 3)
         sunk.groupBy("event_type")
           .agg(count(lit(1)).as("n"), dsum("value").as("total"))
           .orderBy("event_type")
@@ -1217,30 +1076,15 @@ object Events {
     "events_stream_sessions" -> QuerySpec(
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .filter(col("user_id") < 50)
           .select(col("user_id"),
             timestamp_micros(expr("ts div 1000")).as("ts_utc"),
             col("value"))
-          .as[graft.streaming.Streams.SessionEvent]
-        val sessions = graft.streaming.Streams.expiringSessions(stream)
-        val sinkName = "q_events_stream_sessions"
-        graft.streaming.Streams.drained(s, noDataBatches = true) { ckpt =>
-          val q = sessions.toDF().writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_sessions", slicedEventsDir(s, d))
-        }
-        s.table(sinkName)
+          .as[Streams.SessionEvent]
+        val sessions = Streams.expiringSessions(stream)
+        drainToMemory(s, "events_stream_sessions", sessions.toDF(), "append",
+          noDataBatches = true, gated = Some(d))
           .select(col("user_id"),
             date_format(col("session_start"), fmt).as("session_start"),
             col("n"))
@@ -1306,12 +1150,7 @@ object Events {
     //    and are WITHHELD, exactly like the state-API version.
     "events_stream_session_window" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .filter(col("user_id") < 50)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
           .withWatermark("ts_utc", "10 minutes")
@@ -1319,18 +1158,8 @@ object Events {
           .groupBy(col("user_id"),
             session_window(col("ts_utc"), "30 minutes").as("w"))
           .agg(count(lit(1)).as("n"))
-        val sinkName = "q_events_stream_session_window"
-        graft.streaming.Streams.drained(s, noDataBatches = true) { ckpt =>
-          val q = sessions.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_session_window", slicedEventsDir(s, d))
-        }
-        s.table(sinkName)
+        drainToMemory(s, "events_stream_session_window", sessions, "append",
+          noDataBatches = true, gated = Some(d))
           .select(col("user_id"),
             date_format(col("w.start"), fmt).as("session_start"),
             col("n"))
@@ -1366,10 +1195,9 @@ object Events {
 
     "events_stream_restart_recovery" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         // Session-scoped landing (see the fbsink note above).
         val outF = new java.io.File(
-          graft.util.Scratch.sessionDir(s, "restart", d))
+          Scratch.sessionDir(s, "restart", d))
         if (outF.isDirectory) {
           val walk = java.nio.file.Files.walk(outF.toPath)
           try walk.sorted(java.util.Comparator.reverseOrder())
@@ -1377,16 +1205,12 @@ object Events {
           finally walk.close()
         }
         val out = outF.getPath
-        def agg(glob: String) = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", glob)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d, slices = 4))
-          .filter(col("user_id") < 100)
-          .groupBy("user_id")
-          .agg(count(lit(1)).as("n_events"), dsum("value").as("total"))
-        def run(glob: String, ckpt: String) = {
-          val q = agg(glob).writeStream
+        def run(src: DataFrame, ckpt: String) = {
+          val q = src
+            .filter(col("user_id") < 100)
+            .groupBy("user_id")
+            .agg(count(lit(1)).as("n_events"), dsum("value").as("total"))
+            .writeStream
             .outputMode("update")
             .option("checkpointLocation", ckpt)
             .foreachBatch {
@@ -1397,22 +1221,16 @@ object Events {
             .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-          q.recentProgress.count(_.numInputRows > 0)
+          dataBatches(q)
         }
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val n1 = run("slice-00[01].parquet", ckpt)
-          val n2 = run("slice-*.parquet", ckpt)
-          // provable only when the fixture filled all 4 slices (real
-          // fixtures); degenerate fixtures land however much data exists
-          if (slicePartCounts.getOrDefault(
-              slicedEventsDir(s, d, slices = 4), 4) >= 4)
-            require(n1 >= 2 && n2 >= 2,
-              s"restart recovery saw $n1 pre-stop + $n2 post-restart data " +
-                "batches, want >= 2 each (state must be recovered, not rebuilt)")
-          else
-            System.err.println("[events] events_stream_restart_recovery: " +
-              "recovery gate SKIPPED — 4-slice fixture recorded < 4 " +
-              "non-empty slices")
+        Streams.drained(s) { ckpt =>
+          val n1 = run(slicedEvents(s, d, "slice-00[01].parquet", 4), ckpt)
+          val n2 = run(slicedEvents(s, d, slices = 4), ckpt)
+          // Each run owns 2 of the 4 slices, so the capped sum reaches 4
+          // only if BOTH saw >= 2 data batches: state must be recovered,
+          // not rebuilt.
+          batchGate("events_stream_restart_recovery",
+            math.min(n1, 2) + math.min(n2, 2), recordedSlices(s, d, 4), 4)
         }
         // partition discovery yields the bid column; last emission per
         // user = final recovered state. Schema supplied explicitly: an
@@ -1454,12 +1272,8 @@ object Events {
     "events_stream_tws_running_stats" -> QuerySpec(
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+        val stream = slicedEvents(s, d)
           .filter(col("user_id") < 75)
           .select(col("user_id"), col("event_id"), col("ts").as("tsNs"),
             col("value"))
@@ -1467,25 +1281,18 @@ object Events {
         val folded = stream.groupByKey(_.user_id)
           .transformWithState(new graft.streaming.RunningStatsProcessor,
             TimeMode.None(), OutputMode.Append())
-        val sinkName = "q_events_stream_tws"
         val pcKey = "spark.sql.streaming.stateStore.providerClass"
         val prev = s.conf.getOption(pcKey)
         s.conf.set(pcKey, "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
-        try graft.streaming.Streams.drained(s) { ckpt =>
-          val q = folded.toDF().writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_tws_running_stats", slicedEventsDir(s, d))
-        } finally prev match {
-          case Some(v) => s.conf.set(pcKey, v)
-          case None    => s.conf.unset(pcKey)
-        }
-        s.table(sinkName).orderBy("event_id")
+        val sunk =
+          try drainToMemory(s, "events_stream_tws_running_stats",
+            folded.toDF(), "append", gated = Some(d))
+          finally prev match {
+            case Some(v) => s.conf.set(pcKey, v)
+            case None    => s.conf.unset(pcKey)
+          }
+        sunk.orderBy("event_id")
       },
       """SELECT user_id, event_id,
         |       COUNT(*) OVER w AS run_n,
@@ -2070,29 +1877,13 @@ object Events {
     "events_stream_attribution" -> QuerySpec(
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .select(col("user_id"), col("event_id"), col("event_type"),
             col("value"), expr("ts div 1000").as("tus"))
-          .as[graft.streaming.Streams.AttrEvent]
-        val attributed = graft.streaming.Streams
-          .lastTouchAttribution(stream, 86400000000L)
-        val sinkName = "q_events_stream_attribution"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = attributed.toDF().writeStream
-            .outputMode("update")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_attribution", slicedEventsDir(s, d))
-        }
-        s.table(sinkName)
+          .as[Streams.AttrEvent]
+        val attributed = Streams.lastTouchAttribution(stream, 86400000000L)
+        drainToMemory(s, "events_stream_attribution",
+          attributed.toDF(), "update", gated = Some(d))
           .dropDuplicates("event_id")
           .groupBy("attributed_type")
           .agg(count(lit(1)).as("n_purchases"), dsum("value").as("revenue"))
@@ -2591,7 +2382,6 @@ object Events {
     // happens inside the stateful operator, never as a join.
     "events_stream_sliding_windows" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val stream = Tables.eventsStreamSource(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
           .withColumn("value", col("value").cast("decimal(25,6)"))
@@ -2601,17 +2391,8 @@ object Events {
           .agg(count(lit(1)).as("n"), sum("value").as("total"))
           .select(col("window.start").as("wstart"), col("event_type"),
             col("n"), col("total"))
-        val sinkName = "q_events_stream_sliding_windows"
-        graft.streaming.Streams.drained(s, noDataBatches = true) { ckpt =>
-          val q = agg.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table(sinkName)
+        drainToMemory(s, "events_stream_sliding_windows", agg, "append",
+          noDataBatches = true)
           .select(date_format(col("wstart"), fmt).as("wstart"),
             col("event_type"), col("n"),
             col("total").cast("double").as("total"))
@@ -2648,7 +2429,6 @@ object Events {
     // (hour, type) — so tier 2 is ~free; state is bounded by watermark.
     "events_stream_chained_agg" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val stream = Tables.eventsStreamSource(s, d)
           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
           .withColumn("value", col("value").cast("decimal(25,6)"))
@@ -2662,17 +2442,8 @@ object Events {
             sum(col("total")).as("total"))
           .select(col("window.start").as("wstart"), col("event_type"),
             col("n_windows"), col("n"), col("total"))
-        val sinkName = "q_events_stream_chained_agg"
-        graft.streaming.Streams.drained(s, noDataBatches = true) { ckpt =>
-          val q = outer.writeStream
-            .outputMode("append")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table(sinkName)
+        drainToMemory(s, "events_stream_chained_agg", outer, "append",
+          noDataBatches = true)
           .select(date_format(col("wstart"), fmt).as("wstart"),
             col("event_type"), col("n_windows"), col("n"),
             col("total").cast("double").as("total"))
@@ -3331,28 +3102,14 @@ object Events {
     "events_stream_pattern_match" -> QuerySpec(
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.streaming.Trigger
-        val stream = s.readStream
-          .schema(Tables.events(s, d).schema)
-          .option("pathGlobFilter", "slice-*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(slicedEventsDir(s, d))
+        val stream = slicedEvents(s, d)
           .select(col("user_id"), col("ts"), col("event_id"),
             col("event_type"))
-          .as[graft.streaming.Streams.CepEvent]
-        val prog = graft.streaming.Streams.cepProgress(stream)
-        val sinkName = "q_events_stream_pattern_match"
-        graft.streaming.Streams.drained(s) { ckpt =>
-          val q = prog.toDF().writeStream
-            .outputMode("update")
-            .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          requireMultiBatch(q, "events_stream_pattern_match", slicedEventsDir(s, d))
-        }
-        s.table(sinkName).groupBy("user_id")
+          .as[Streams.CepEvent]
+        val prog = Streams.cepProgress(stream)
+        drainToMemory(s, "events_stream_pattern_match", prog.toDF(), "update",
+          gated = Some(d))
+          .groupBy("user_id")
           .agg(max(struct(col("folded"), col("n_events"),
             col("n_purchases"), col("n_browse_buy"), col("max_run")))
             .as("m"))

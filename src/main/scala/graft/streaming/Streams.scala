@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.util.Scratch
+
 /** Structured Streaming lift of the event-time operators (SURVEY.md §2.10).
   *
   * The same logical shapes as the batch pack in `graft.queries.Events`,
@@ -27,23 +29,6 @@ object Streams {
       .agg(count(lit(1)).as("n"), sum("value").as("total"))
       .select(col("window.start").as("wstart"), col("event_type"),
         col("n"), col("total"))
-
-  /** Gap-based session windows per user, 30-minute gap. */
-  def sessionized(events: DataFrame, tsCol: String = "ts_utc",
-                  gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark(tsCol, "10 minutes")
-      .groupBy(session_window(col(tsCol), gap), col("user_id"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total"))
-      .select(col("session_window.start").as("session_start"),
-        col("user_id"), col("n"), col("total"))
-
-  /** Exactly-once style dedup keyed by event id, state bounded by the
-    * watermark (streaming lift of the exact-dedup operator). */
-  def dedupByEventId(events: DataFrame, tsCol: String = "ts_utc"): DataFrame =
-    events
-      .withWatermark(tsCol, "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Stream-stream interval join: each click joined to purchases by the
     * same user within the preceding `intervalMinutes`. Watermarks on both
@@ -289,6 +274,10 @@ object Streams {
       }
   }
 
+  /** Shuffle partitions while a drained query runs (see [[drained]]). */
+  private val drainPartitions = 2
+  private val ckptSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Runs a drain-the-source streaming query (AvailableNow → terminate)
     * with state-sized session tuning, passing a fresh checkpoint dir to
     * `body` and restoring the session conf afterwards.
@@ -298,16 +287,18 @@ object Streams {
     * is the fixed cost of a micro-batch, so a KB-scale state spread over
     * `spark.sql.shuffle.partitions`=32 pays 32× (128× for a stream-stream
     * join: 4 stores per partition) the necessary commit latency:
-    *   - shuffle partitions lowered to `partitions` for the lifetime of
-    *     the query (pinned into the plan at start; a production job sizes
-    *     this to its state volume the same way). Default 2: the test
-    *     corpus carries KB-scale state, so even 4 stores paid 2× the
-    *     necessary commit fsyncs — and a stream-stream join multiplies
-    *     the count by 4 store instances per partition;
+    *   - shuffle partitions lowered to [[drainPartitions]] for the
+    *     lifetime of the query (pinned into the plan at start; a
+    *     production job sizes this to its state volume the same way).
+    *     2, because the test corpus carries KB-scale state: even 4
+    *     stores paid 2× the necessary commit fsyncs;
     *   - the checkpoint (offsets/commits/state) placed on tmpfs when the
-    *     host has one, so commit fsyncs don't hit rotational/virtio disk.
-    *     A durable deployment points this at HDFS/S3 instead — the knob is
-    *     the location, the layout is identical.
+    *     host has one ([[Scratch.shmBase]]), so commit fsyncs don't hit
+    *     rotational/virtio disk. A durable deployment points this at
+    *     HDFS/S3 instead — the knob is the location, the layout is
+    *     identical. The dir is named `graft_ckpt_<n>_p<pid>`, so a JVM
+    *     killed mid-drain leaves an orphan [[Scratch.sweepOrphans]]
+    *     reclaims once that PID is dead.
     * No-data micro-batches are disabled by default: most queries run this
     * way emit their results in data batches (append dedup/inner join emit
     * immediately; complete/update modes emit per batch), so the extra
@@ -317,30 +308,38 @@ object Streams {
     * advance — event-time TIMEOUTS (flatMapGroupsWithState) and append-
     * mode windowed aggregations only release rows when a later batch
     * moves the watermark past them. */
-  def drained[T](spark: org.apache.spark.sql.SparkSession, partitions: Int = 2,
+  def drained[T](spark: org.apache.spark.sql.SparkSession,
                  noDataBatches: Boolean = false)
                 (body: String => T): T = {
     val pKey = "spark.sql.shuffle.partitions"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prevP = spark.conf.get(pKey)
     val prevN = spark.conf.getOption(nKey)
-    val base =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(base), "graft-ckpt-")
-    spark.conf.set(pKey, partitions.toString)
+    val ckpt = newCheckpointDir()
+    spark.conf.set(pKey, drainPartitions.toString)
     spark.conf.set(nKey, noDataBatches.toString)
-    try body(ckpt.toString)
+    try body(ckpt.getPath)
     finally {
       spark.conf.set(pKey, prevP)
       prevN.fold(spark.conf.unset(nKey))(spark.conf.set(nKey, _))
-      scala.util.Try {
-        val walk = java.nio.file.Files.walk(ckpt)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => scala.util.Try(java.nio.file.Files.delete(p)))
-        finally walk.close()
-      }
+      Scratch.deleteRecursively(ckpt)
+    }
+  }
+
+  /** The checkpoint dir name for sequence number `n` (exposed so the
+    * orphan-sweep round-trip spec covers it). */
+  private[graft] def checkpointName(n: Long): String =
+    s"graft_ckpt_${n}_p${Scratch.jvmTag}"
+
+  /** A new, empty checkpoint dir. `createDirectory` fails on an existing
+    * dir, so a leftover of a dead JVM whose PID this one reused is
+    * skipped, never adopted (its offsets would replay). */
+  private def newCheckpointDir(): java.io.File = {
+    val f = new java.io.File(Scratch.shmBase,
+      checkpointName(ckptSeq.incrementAndGet()))
+    try { java.nio.file.Files.createDirectory(f.toPath); f }
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException => newCheckpointDir()
     }
   }
 

@@ -132,6 +132,10 @@ object Scratch {
     * round trips, streaming sink landings): no two sessions — let alone
     * two JVMs — ever share one. On tmpfs — small and rewritten per run. */
   def sessionDir(s: SparkSession, tag: String, d: String): String =
-    make(shmBase, s"graft_${tag}_${Integer.toHexString(d.hashCode)}" +
-      s"_p${jvmTag}_s${sessionTag(s)}")
+    make(shmBase, sessionDirName(tag, d, sessionTag(s)))
+
+  /** The name [[sessionDir]] mints, for the session token `session`. */
+  private[graft] def sessionDirName(tag: String, d: String,
+                                    session: String): String =
+    s"graft_${tag}_${Integer.toHexString(d.hashCode)}_p${jvmTag}_s$session"
 }

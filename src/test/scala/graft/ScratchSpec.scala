@@ -53,7 +53,10 @@ class ScratchSpec extends AnyFunSuite {
     // matcher, else a future rename silently exempts itself from reclaim
     val names = Seq(
       new File(j).getName,
-      s"graft_t_${Integer.toHexString(42)}_p${Scratch.jvmTag}_sabc123")
+      s"graft_t_${Integer.toHexString(42)}_p${Scratch.jvmTag}_sabc123",
+      graft.streaming.Streams.checkpointName(7),
+      Scratch.sessionDirName(graft.queries.Events.slicedFixtureTag(3, 12),
+        "/no/such/dir", "abc123"))
     val m = "graft_.*_p([0-9a-f]+?)(?:_s[0-9a-f]+)?".r
     names.foreach { n =>
       n match {

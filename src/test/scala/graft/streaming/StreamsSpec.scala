@@ -44,42 +44,6 @@ class StreamsSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("streaming dedup-by-event-id drops replayed rows") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String, Double, Timestamp)]
-    val stream = mem.toDF()
-      .toDF("event_id", "user_id", "event_type", "value", "ts_utc")
-    val q = Streams.startMemorySink(
-      Streams.dedupByEventId(stream), "dedup_out", OutputMode.Append())
-    val rows = eventRows.take(100)
-    mem.addData(rows.toSeq)
-    mem.addData(rows.take(50).toSeq) // replay half
-    q.processAllAvailable(); q.stop()
-    assert(spark.table("dedup_out").count() == 100)
-  }
-
-  test("streaming session windows match batch session_window aggregation") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String, Double, Timestamp)]
-    val stream = mem.toDF()
-      .toDF("event_id", "user_id", "event_type", "value", "ts_utc")
-    val q = Streams.startMemorySink(
-      Streams.sessionized(stream), "session_out", OutputMode.Complete())
-    mem.addData(eventRows.toSeq)
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("session_out")
-      .select("user_id", "session_start", "n")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
-    val want = Tables.eventsWithTs(spark, sf)
-      .groupBy(session_window(col("ts_utc"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), col("w.start"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
   test("stream-stream interval join matches the batch range join") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -340,7 +304,7 @@ class StreamsSpec extends SparkSpec {
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val before = spark.conf.get(pKey)
     var ckptSeen: String = null
-    Streams.drained(spark, partitions = 2) { ckpt =>
+    Streams.drained(spark) { ckpt =>
       ckptSeen = ckpt
       assert(spark.conf.get(pKey) == "2")
       assert(spark.conf.get(nKey) == "false")
@@ -353,6 +317,24 @@ class StreamsSpec extends SparkSpec {
     Streams.drained(spark, noDataBatches = true) { _ =>
       assert(spark.conf.get(nKey) == "true")
     }
+  }
+
+  test("batchGate holds the data-batch floor only on fully sliced fixtures") {
+    import graft.queries.Events.batchGate
+    batchGate("g", observed = 3, recorded = 3, min = 3)
+    batchGate("g", observed = 5, recorded = 4, min = 3)
+    val e = intercept[IllegalArgumentException](
+      batchGate("g", observed = 2, recorded = 3, min = 3))
+    assert(e.getMessage.contains("g drained in 2 data batches, want >= 3"))
+    // a degenerate fixture (fewer non-empty slices than the floor) is
+    // exempt, but the skip must be visible on stderr
+    val err = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try batchGate("g", observed = 0, recorded = 1, min = 3)
+    finally System.setErr(prevErr)
+    assert(err.toString.contains("g: multi-batch gate SKIPPED") &&
+      err.toString.contains("fixture recorded only 1 non-empty slice(s)"))
   }
 
   test("funnel state machine carries step dependencies across batches") {
