@@ -47,7 +47,7 @@ object Verify {
     // downstream checkers can detect.
     only.foreach { prefixes =>
       System.err.println(
-        s"[verify] WARNING: SPARK_GRAFT_ONLY is set — PARTIAL coverage, " +
+        s"[verify] WARNING: SPARK_GRAFT_ONLY is set - PARTIAL coverage, " +
           s"only query-name prefixes: ${prefixes.mkString(", ")}")
       Files.writeString(Paths.get(s"$outDir/SUBSET_MARKER.json"),
         prefixes.map(p => "\"" + p + "\"").mkString("[", ",", "]"))
@@ -59,12 +59,16 @@ object Verify {
     // snapshotted around each query (queries run sequentially, so the
     // delta is the query's own). Memory spills are APPROXIMATE credit
     // (in-memory size of spilled blocks); disk spills are real bytes.
-    // The listener bus is asynchronous, so a straggler task's spill can
-    // bleed into the NEXT query's delta — fine for the gate's GB-scale
-    // findings, not a per-query accounting ledger.
+    // The listener bus is asynchronous, so both reads of a query's
+    // delta follow a bus drain: every task before the read is counted.
+    val metrics = sys.env.get("SPARK_GRAFT_METRICS").contains("1")
     val spillMem = new java.util.concurrent.atomic.AtomicLong
     val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    if (sys.env.get("SPARK_GRAFT_METRICS").contains("1"))
+    def spilled(): (Long, Long) = {
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      (spillMem.get(), spillDisk.get())
+    }
+    if (metrics)
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
           override def onTaskEnd(
@@ -87,7 +91,7 @@ object Verify {
             m.contains("Checkpoint block"))
       }
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      val (m0, d0) = (spillMem.get(), spillDisk.get())
+      val (m0, d0) = if (metrics) spilled() else (0L, 0L)
       def runOnce(): Unit =
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -95,13 +99,15 @@ object Verify {
         try runOnce()
         catch { case e: Throwable if isCheckpointLoss(e) =>
           System.err.println(s"[verify] $name: checkpoint blocks lost " +
-            "(executor loss) — evicting shared stages, rebuilding once")
+            "(executor loss) - evicting shared stages, rebuilding once")
           graft.util.SessionScopedCache.evictAll(spark, sfDir)
           runOnce()
         }
-        if (sys.env.get("SPARK_GRAFT_METRICS").contains("1"))
-          println(s"[metrics] $name spill_mem=${spillMem.get() - m0} " +
-            s"spill_disk=${spillDisk.get() - d0}")
+        if (metrics) {
+          val (m1, d1) = spilled()
+          println(s"[metrics] $name spill_mem=${m1 - m0} " +
+            s"spill_disk=${d1 - d0}")
+        }
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -53,29 +53,19 @@ object Analytic {
 
   /** Tie-averaged DOUBLED rank per distinct value of `vcol` (a LongType
     * column): dr(v) = 2·(#values below v) + count(v) + 1, so average
-    * ranks with .5 ties stay integral. Computed with the SAME two-level
-    * banded prefix sum as stat_mann_whitney_u / customer_abc_classes:
-    * the only unpartitioned window runs over the BAND table (bounded by
-    * the value domain / bandWidth, never the row count); the fine prefix
-    * is partitioned by band. Input: one row per distinct value with its
-    * count — callers groupBy first, so this stage is distinct-sized.
-    * Exposed private[graft] so PhysicalPlanSpec can pin the shape. */
+    * ranks with .5 ties stay integral. The count of values below is a
+    * [[graft.ops.Banded]] exclusive running sum over bands of width
+    * `bandWidth`. Input: one row per distinct value with its count —
+    * callers groupBy first, so this stage is distinct-sized. Exposed
+    * private[graft] so PhysicalPlanSpec can pin the shape. */
   private[graft] def doubledRankTable(
       distinctCounts: org.apache.spark.sql.DataFrame,
-      vcol: String, bandWidth: Long): org.apache.spark.sql.DataFrame = {
-    val b = distinctCounts.withColumn("band", expr(s"$vcol div $bandWidth"))
-    val wBand = Window.orderBy(col("band").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bandOff = b.groupBy("band").agg(sum("c").as("bc"))
-      .select(col("band"),
-        coalesce(sum("bc").over(wBand), lit(0L)).as("off"))
-    val wIn = Window.partitionBy("band").orderBy(col(vcol).asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    b.join(broadcast(bandOff), "band")
+      vcol: String, bandWidth: Long): org.apache.spark.sql.DataFrame =
+    graft.ops.Banded.running(
+        distinctCounts.withColumn("band", expr(s"$vcol div $bandWidth")),
+        Seq(vcol), Seq("c" -> "below"))
       .select(col(vcol),
-        (lit(2L) * (col("off") + coalesce(sum("c").over(wIn), lit(0L))) +
-          col("c") + lit(1L)).as("dr"))
-  }
+        (lit(2L) * col("below") + col("c") + lit(1L)).as("dr"))
 
   /** Poisson-bootstrap replicate means over (o_orderkey, o_totalprice):
     * the B/2-fold expansion does 32 md5s per order (each 128-bit digest
@@ -577,7 +567,7 @@ object Analytic {
         // checkpoint (r11): leaving substring(name) in the post-join
         // select re-evaluates it per PAIR inside the join's emit loop —
         // 2x per candidate instead of once per banded row (the
-        // deferred-evaluation hazard the AhashProbe pattern measures) —
+        // deferred-evaluation hazard only a per-stage timing shows) —
         // and the checkpoint gets narrower too (9 chars vs the full
         // name).
         // r15: land the banded table PARTITIONED BY THE BLOCK KEY at
@@ -1435,12 +1425,12 @@ object Analytic {
     // wrong summary (revenue, tokens-per-doc). U_A counts B-values
     // beaten per A-row (ties half-weighted), computed WITHOUT ranking
     // the corpus: per-distinct-value counts, then the exact cumulative
-    // count of B below each value via the SAME distributed two-level
-    // prefix sum as customer_abc_classes (coarse value BANDS — bounded
-    // by the cents domain, not the row count — window only over the
-    // tiny band table; the fine prefix runs partitioned by band). All
-    // tallies are exact: doubled statistics (2U keeps the half-tie
-    // weight integral) accumulate in DECIMAL(38,0), and the U outputs
+    // count of B below each value via the ops.Banded two-level prefix
+    // sum (coarse value BANDS — bounded by the cents domain, not the
+    // row count — window only over the tiny band table; the fine
+    // prefix runs partitioned by band). All tallies are exact: doubled
+    // statistics (2U keeps the half-tie weight integral) accumulate in
+    // DECIMAL(38,0), and the U outputs
     // convert through the hi/lo 2^20 split (profile_correlation_matrix
     // precedent) so the conversion stays bit-identical even past 2^53
     // where a raw DECIMAL→DOUBLE cast diverges between engines. The
@@ -1452,7 +1442,6 @@ object Analytic {
     // scale.
     "stat_mann_whitney_u" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val j = Tables.orders(s, d)
           .join(broadcast(Tables.customer(s, d)),
             col("o_custkey") === col("c_custkey"))
@@ -1467,21 +1456,9 @@ object Analytic {
             .cast("decimal(38,0)").as("ca"),
           sum(when(col("seg") === "MACHINERY", 1L).otherwise(0L))
             .cast("decimal(38,0)").as("cb"))
-        val b = pv.withColumn("band", expr("v div 1000000"))
-        val bandTot = b.groupBy("band")
-          .agg(sum("ca").as("basum"), sum("cb").as("bbsum"))
-        val wBand = Window.orderBy(col("band").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val z = lit(0).cast("decimal(38,0)")
-        val bandOff = bandTot.select(col("band"),
-          coalesce(sum("basum").over(wBand), z).as("aoff"),
-          coalesce(sum("bbsum").over(wBand), z).as("boff"))
-        val wIn = Window.partitionBy("band").orderBy(col("v").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val cum = b.join(broadcast(bandOff), "band")
-          .select(col("v"), col("ca"), col("cb"),
-            (col("aoff") + coalesce(sum("ca").over(wIn), z)).as("cuma"),
-            (col("boff") + coalesce(sum("cb").over(wIn), z)).as("cumb"))
+        val cum = graft.ops.Banded.running(
+          pv.withColumn("band", expr("v div 1000000")),
+          Seq("v"), Seq("ca" -> "cuma", "cb" -> "cumb"))
         // per-TERM hi/lo split on BIGINT (the profile_correlation_matrix
         // idiom — DuckDB's // is integer division on BIGINT but float
         // division on DECIMAL, so the split must happen before the
@@ -2085,7 +2062,7 @@ object Analytic {
     // and their ratio). Deciles are SELECTED order statistics at rank
     // ceil(k·n/10) (type-1 quantiles — actual data values, invariant
     // to tie permutation), located WITHOUT ranking the corpus: the
-    // same banded two-level prefix as stat_mann_whitney_u gives each
+    // ops.Banded two-level prefix (keyed by segment) gives each
     // distinct value its cumulative range [cum, cum+c), and the 18
     // (segment, decile) rank targets ride a broadcast join with a
     // range residual. The oracle is the independent NAIVE
@@ -2103,18 +2080,9 @@ object Analytic {
             floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")
               .as("v"))
         val pv = j.groupBy("seg", "v").agg(count(lit(1)).as("c"))
-        val b = pv.withColumn("band", expr("v div 1000000"))
-        val wBand = Window.partitionBy("seg").orderBy(col("band").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val bandOff = b.groupBy("seg", "band").agg(sum("c").as("bc"))
-          .select(col("seg"), col("band"),
-            coalesce(sum("bc").over(wBand), lit(0L)).as("off"))
-        val wIn = Window.partitionBy("seg", "band").orderBy(col("v").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val cum = b.join(broadcast(bandOff), Seq("seg", "band"))
-          .select(col("seg"), col("v"), col("c"),
-            (col("off") + coalesce(sum("c").over(wIn), lit(0L)))
-              .as("cum"))
+        val cum = graft.ops.Banded.running(
+          pv.withColumn("band", expr("v div 1000000")),
+          Seq("v"), Seq("c" -> "cum"), keys = Seq("seg"))
         val ranks = j.groupBy(col("seg").as("seg2"))
           .agg(count(lit(1)).as("n"))
           .select(col("seg2"),
@@ -3324,9 +3292,9 @@ object Analytic {
             floor(col("p_retailprice") * 100 + lit(0.5)).cast("long")
               .as("pc"))
         // r16 (guide §2): the running max of strictly-cheaper levels is
-        // assembled bandwise (same two-level decomposition as the banded
-        // ECDF/rank tables) instead of one unpartitioned window over the
-        // whole distinct-price table: max_cheaper(v) =
+        // assembled bandwise (ops.Banded with agg = Max) instead of one
+        // unpartitioned window over the whole distinct-price table:
+        // max_cheaper(v) =
         // max(bandOff(band(v)), inMax(v)) where bandOff is the exclusive
         // running max over the BAND census (the only unpartitioned
         // window, domain/8192 rows) and inMax the exclusive running max
@@ -3336,15 +3304,8 @@ object Analytic {
         // single-window form, including the first level's NULL.
         val lv = c.groupBy("pc").agg(max("p_size").as("lvl_max"))
           .withColumn("band", expr("pc div 8192"))
-        val wBand = Window.orderBy(col("band").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val bandOff = lv.groupBy("band").agg(max("lvl_max").as("bm"))
-          .select(col("band"), max("bm").over(wBand).as("boff"))
-        val wIn = Window.partitionBy("band").orderBy(col("pc").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val frontier = lv.join(broadcast(bandOff), "band")
-          .withColumn("max_cheaper",
-            greatest(col("boff"), max("lvl_max").over(wIn)))
+        val frontier = graft.ops.Banded.running(lv, Seq("pc"),
+            Seq("lvl_max" -> "max_cheaper"), agg = graft.ops.Banded.Max)
           .filter(col("max_cheaper").isNull ||
             col("max_cheaper") < col("lvl_max"))
           .select(col("pc"), col("lvl_max"))

@@ -122,13 +122,20 @@ object Events {
       val parts = Option(stage.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
       val t0 = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case (p, i) =>
+      val conf = s.sessionState.newHadoopConf()
+      val nonEmpty = parts.zipWithIndex.count { case (p, i) =>
         val dst = new java.io.File(out, f"slice-$i%03d.parquet")
         java.nio.file.Files.move(p.toPath, dst.toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         dst.setLastModified(t0 + i * 1000L)
+        // an empty table still writes one (row-less) part file: count
+        // rows from the parquet footer here, without a Spark job
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(dst.toURI), conf))
+        try r.getRecordCount > 0 finally r.close()
       }
-      (out.getPath, parts.length)
+      (out.getPath, nonEmpty)
     })
 
   /** The [[Scratch.sessionDir]] tag of a fixture build. */
@@ -136,7 +143,7 @@ object Events {
     s"events_sliced_${slices}_$build"
 
   /** Non-empty slices the `slices`-slice fixture of `d` recorded. */
-  private def recordedSlices(s: SparkSession, d: String,
+  private[graft] def recordedSlices(s: SparkSession, d: String,
                              slices: Int = 3): Int =
     slicedFixture(s, d, slices)._2
 
@@ -185,7 +192,7 @@ object Events {
       require(observed >= min,
         s"$name drained in $observed data batches, want >= $min")
     else
-      System.err.println(s"[events] $name: multi-batch gate SKIPPED — " +
+      System.err.println(s"[events] $name: multi-batch gate SKIPPED - " +
         s"fixture recorded only $recorded non-empty slice(s)")
 
   /** Starts `df` into the memory table `q_<name>` on checkpoint `ckpt`
@@ -2306,7 +2313,6 @@ object Events {
     // from lag-gap windows and the identical banded sweep.
     "events_peak_concurrency" -> QuerySpec(
       (s, d) => {
-        val W = org.apache.spark.sql.expressions.Window
         val sess = Tables.eventsWithTs(s, d)
           .groupBy(session_window(col("ts_utc"), "30 minutes").as("w"),
             col("user_id"))
@@ -2317,19 +2323,10 @@ object Events {
             struct(col("en").as("t"), lit(-1L).as("delta")))).as("b"))
           .select(col("b.t").as("t"), col("b.delta").as("delta"))
           .withColumn("band", expr("unix_micros(t) div 86400000000"))
-        val inb = bounds.withColumn("p",
-          sum("delta").over(W.partitionBy("band")
-            .orderBy(col("t"), col("delta"))
-            .rowsBetween(Long.MinValue, 0)))
-        val base = bounds.groupBy("band").agg(sum("delta").as("bd"))
-          .withColumn("base", coalesce(
-            sum("bd").over(W.orderBy("band").rowsBetween(Long.MinValue, -1)),
-            lit(0L)))
-          .select("band", "base")
-        inb.join(broadcast(base), "band")
+        graft.ops.Banded.running(bounds, Seq("t", "delta"),
+            Seq("delta" -> "live"), inclusive = true)
           .groupBy("band")
-          .agg(max(col("base") + col("p")).as("peak"),
-            count(lit(1)).as("n_bounds"))
+          .agg(max("live").as("peak"), count(lit(1)).as("n_bounds"))
           .orderBy("band")
       },
       """WITH dgrain AS (SELECT DISTINCT user_id, ts FROM events),

@@ -903,25 +903,15 @@ object LinkageQ {
     // conjunctive pass (which ignores the band) keeps them.
     "linkage_sorted_neighborhood" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val (srcA, srcB, _) = linkageStage(s, d)
         val recs = srcA.select(lit("A").as("src"), col("a_id").as("rid"),
             col("a_band").as("band"), col("a_name").as("name"))
           .unionAll(srcB.select(lit("B"), col("b_id"), col("b_band"),
             col("b_name")))
           .withColumn("pfx", substring(col("name"), 10, 3))
-        val wStripe = Window.partitionBy("band", "pfx")
-          .orderBy("name", "src", "rid")
-        val ranked = recs
-          .withColumn("r", row_number().over(wStripe).cast("long"))
-        val offsets = recs.groupBy("band", "pfx")
-          .agg(count(lit(1)).as("bn"))
-          .withColumn("off", coalesce(sum("bn").over(
-            Window.orderBy("band", "pfx")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("band"), col("pfx"), col("off"))
-        val g = ranked.join(broadcast(offsets), Seq("band", "pfx"))
-          .select(col("src"), col("rid"), (col("off") + col("r")).as("g2k"))
+        val g = graft.ops.Banded.rowNumber(recs, Seq("name", "src", "rid"),
+            "g2k", bands = Seq("band", "pfx"))
+          .select(col("src"), col("rid"), col("g2k"))
           .localCheckpoint(true)
         val wmax = 10
         val pairs = g

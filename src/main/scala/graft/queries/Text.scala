@@ -339,22 +339,14 @@ object Text {
     // size; cross-band offsets come from the tiny band-count table.
     "dataset_epoch_shuffle_audit" -> QuerySpec(
       (s, d) => {
-        val W = org.apache.spark.sql.expressions.Window
         def ranked(epoch: Int) = {
           val h = TextOps.hash64(
             concat_ws(":", lit(epoch), col("doc_id")))
           val base = Tables.documents(s, d)
             .select(col("doc_id"), h.as("h"))
             .withColumn("band", expr("h div 18014398509481984")) // 2^54
-          val wIn = W.partitionBy("band").orderBy("h", "doc_id")
-          val off = base.groupBy("band").agg(count(lit(1)).as("bn"))
-            .withColumn("cbase", coalesce(sum("bn").over(
-              W.orderBy("band").rowsBetween(Long.MinValue, -1)), lit(0L)))
-            .select("band", "cbase")
-          base.withColumn("rin", row_number().over(wIn).cast("long"))
-            .join(broadcast(off), "band")
-            .select(col("doc_id"), (col("rin") + col("cbase"))
-              .as(s"r$epoch"))
+          graft.ops.Banded.rowNumber(base, Seq("h", "doc_id"), s"r$epoch")
+            .select(col("doc_id"), col(s"r$epoch"))
         }
         ranked(1).join(ranked(2), "doc_id")
           .select(((col("r1") - col("r2")) * (col("r1") - col("r2")))
@@ -467,21 +459,12 @@ object Text {
     // DECIMAL(38,0) beyond) until the two closed-form divisions.
     "corpus_token_gini" -> QuerySpec(
       (s, d) => {
-        val W = org.apache.spark.sql.expressions.Window
         val dt = Tables.documents(s, d)
           .select(col("doc_id"),
             size(TextOps.tokens(col("text"))).cast("long").as("tk"))
           .withColumn("band", expr("tk div 32"))
-        val wIn = W.partitionBy("band").orderBy("tk", "doc_id")
-        val ranked = dt.withColumn("rin", row_number().over(wIn)
-          .cast("long"))
-        val base = dt.groupBy("band").agg(count(lit(1)).as("bn"))
-          .withColumn("cbase", coalesce(
-            sum("bn").over(W.orderBy("band").rowsBetween(
-              Long.MinValue, -1)), lit(0L)))
-          .select("band", "cbase")
-        val g = ranked.join(broadcast(base), "band")
-          .select((col("rin") + col("cbase")).as("r"), col("tk"))
+        val g = graft.ops.Banded.rowNumber(dt, Seq("tk", "doc_id"), "r")
+          .select(col("r"), col("tk"))
         val tot = g.agg(count(lit(1)).as("n"), sum("tk").as("sx"),
           sum(col("r") * col("tk")).as("srx"))
         // global agg + crossJoin (not groupBy on tot's columns): an

@@ -51,33 +51,23 @@ object Warehouse {
     // r16 (guide §2 — the r15 shape ran BOTH cumulative ECDF sums
     // through one UNPARTITIONED window over the distinct-value table;
     // for a value domain like prices that table is huge and WindowExec
-    // moves all of it to a single partition): two-level banded prefix
-    // sum instead, the same decomposition as Analytic.doubledRankTable —
-    // cum(v) = off(band(v)) + cum_within_band(v). The only unpartitioned
-    // window left runs over the BAND table (domain / 1024, never
-    // |distinct values|); the per-value ca/cb are the identical exact
+    // moves all of it to a single partition): the ops.Banded two-level
+    // prefix sum instead — cum(v) = off(band(v)) + cum_within_band(v).
+    // The only unpartitioned window left runs over the BAND table
+    // (domain / 1024, never |distinct values|); the per-value ca/cb are
+    // the identical exact
     // long sums, merely re-associated, so every gap — and the max —
     // is bit-identical. NULL v (impossible for the current consumers,
     // kept total anyway) sorts first under Spark's ASC ordering, so it
     // maps to the minimal band.
     val band = coalesce(
       expr("CAST(floor(v / 1024.0) AS BIGINT)"), lit(Long.MinValue))
-    val b = counts.withColumn("band", band)
-    val wBand = Window.orderBy(col("band").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bandOff = b.groupBy("band")
-      .agg(sum("na").as("bna"), sum("nb").as("bnb"))
-      .select(col("band"),
-        coalesce(sum("bna").over(wBand), lit(0L)).as("offa"),
-        coalesce(sum("bnb").over(wBand), lit(0L)).as("offb"))
-    val wIn = Window.partitionBy("band").orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // global agg (not groupBy on tot's columns) so an EMPTY input still
     // yields the oracle's one NULL row; safeDiv so a one-sided split
     // (tb=0) is SQL-NULL, not an ANSI error
-    val ks = b.join(broadcast(bandOff), "band")
-      .select((col("offa") + sum("na").over(wIn)).as("ca"),
-        (col("offb") + sum("nb").over(wIn)).as("cb"))
+    val ks = graft.ops.Banded.running(counts.withColumn("band", band),
+        Seq("v"), Seq("na" -> "ca", "nb" -> "cb"), inclusive = true)
+      .select(col("ca"), col("cb"))
       .crossJoin(broadcast(tot))
       .select(abs(
         Analytic.safeDiv(col("ca").cast("double"), col("ta").cast("double")) -
@@ -1216,21 +1206,13 @@ object Warehouse {
         // (rows sharing a cnt are adjacent under (cnt, o_custkey), and
         // only cnt is output, so the custkey tie-break never mattered).
         // The cumulative sum runs over the distinct-VALUE table with the
-        // same two-level banded prefix sum as Analytic.doubledRankTable:
-        // the only unpartitioned window is over the BAND table (bounded
-        // by the count domain / 1024, never |keys|).
+        // ops.Banded two-level prefix sum: the only unpartitioned window
+        // is over the BAND table (bounded by the count domain / 1024,
+        // never |keys|).
         val dist = counts.groupBy("cnt").agg(count(lit(1)).as("c"))
-        val b = dist.withColumn("band", expr("cnt div 1024"))
-        val wBand = Window.orderBy(col("band").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val bandOff = b.groupBy("band").agg(sum("c").as("bc"))
-          .select(col("band"),
-            coalesce(sum("bc").over(wBand), lit(0L)).as("off"))
-        val wIn = Window.partitionBy("band").orderBy(col("cnt").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cum = b.join(broadcast(bandOff), "band")
-          .select(col("cnt"), col("c"),
-            (col("off") + sum("c").over(wIn)).as("cum"))
+        val cum = graft.ops.Banded.running(
+          dist.withColumn("band", expr("cnt div 1024")),
+          Seq("cnt"), Seq("c" -> "cum"), inclusive = true)
         val agg = counts.agg(
           count(lit(1)).as("n_keys"),
           sum("cnt").cast("long").as("n_rows"),
@@ -1282,9 +1264,9 @@ object Warehouse {
     // killer this round's window audit exists to remove): each metric's
     // global rank is now assembled from parallel pieces —
     //   rank(x) = #{rows with metric "before" x}   (banded prefix sum
-    //             over the DISTINCT-metric table, Analytic.
-    //             doubledRankTable decomposition: the only unpartitioned
-    //             window runs over the band census, never |customers|)
+    //             over the DISTINCT-metric table, ops.Banded: the
+    //             only unpartitioned window runs over the band census,
+    //             never |customers|)
     //           + row_number within x's equal-metric group ordered by
     //             custkey (a PARTITIONED window keyed on the metric).
     // ntile(4) is then the closed-form bucket of (rank, n): with
@@ -1310,17 +1292,10 @@ object Warehouse {
         def rankDim(mc: String, bandE: org.apache.spark.sql.Column,
                     as: String): org.apache.spark.sql.DataFrame = {
           val dist = m.groupBy(mc).agg(count(lit(1)).as("c"))
-          val b = dist.withColumn("band", bandE)
-          val wBand = Window.orderBy(col("band").desc)
-            .rowsBetween(Window.unboundedPreceding, -1)
-          val bandOff = b.groupBy("band").agg(sum("c").as("bc"))
-            .select(col("band"),
-              coalesce(sum("bc").over(wBand), lit(0L)).as("off"))
-          val wIn = Window.partitionBy("band").orderBy(col(mc).desc)
-            .rowsBetween(Window.unboundedPreceding, -1)
-          val cumBefore = b.join(broadcast(bandOff), "band")
-            .select(col(mc),
-              (col("off") + coalesce(sum("c").over(wIn), lit(0L))).as("cb"))
+          val cumBefore = graft.ops.Banded.running(
+              dist.withColumn("band", bandE), Seq(mc), Seq("c" -> "cb"),
+              descending = true)
+            .select(col(mc), col("cb"))
           val wVal = Window.partitionBy(mc).orderBy(col("o_custkey").asc)
           m.select(col("o_custkey"), col(mc))
             .join(cumBefore, Seq(mc))
@@ -1888,27 +1863,16 @@ object Warehouse {
     // itself. Verified equal to the naive plan in-probe at sf0.01.
     "customer_abc_classes" -> QuerySpec(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val rev = Tables.orders(s, d)
           .select(col("o_custkey"),
             floor(col("o_totalprice") * 100 + lit(0.5))
               .cast("decimal(38,0)").as("cents"))
           .groupBy("o_custkey").agg(sum("cents").as("r"))
         val tot = rev.agg(sum("r").as("t"))
-        val b = rev.withColumn("band",
-          expr("CAST(r AS BIGINT) div 10000000"))
-        val bandTot = b.groupBy("band")
-          .agg(sum("r").as("bsum"))
-        val wBand = Window.orderBy(col("band").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val bandOff = bandTot.withColumn("boff",
-          coalesce(sum("bsum").over(wBand), lit(0).cast("decimal(38,0)")))
-          .select(col("band"), col("boff"))
-        val wIn = Window.partitionBy("band")
-          .orderBy(col("r").desc, col("o_custkey"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cum = b.join(broadcast(bandOff), "band")
-          .withColumn("cum", col("boff") + sum("r").over(wIn))
+        val cum = graft.ops.Banded.running(
+            rev.withColumn("band", expr("CAST(r AS BIGINT) div 10000000")),
+            Seq("r", "o_custkey"), Seq("r" -> "cum"), inclusive = true,
+            descending = true)
           .crossJoin(broadcast(tot))
         val cls = cum.withColumn("abc_class",
           when(col("cum") * 10 <= col("t") * 8, "A")

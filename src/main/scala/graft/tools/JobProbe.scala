@@ -37,23 +37,19 @@ object JobProbe {
     try graft.SparkEntry.queries("agg_pricing_summary")(spark, dir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => }
+    // the listener has seen every earlier event (warmup and failed
+    // queries included) before a reset, and every event of the query
+    // before the read: nothing bleeds across queries
+    def drain(): Unit = org.apache.spark.GraftBus.drain(spark.sparkContext)
     names.foreach { n =>
+      drain()
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
       val t0 = System.nanoTime()
       try {
         graft.SparkEntry.queries(n)(spark, dir)
           .write.format("noop").mode("overwrite").save()
         val wallMs = (System.nanoTime() - t0) / 1e6
-        // r15 ADVICE: a fixed sleep raced late listener events into the
-        // NEXT query's counters on loaded runs. The listener bus is
-        // private[spark], so poll until the counters are stable for a
-        // full quiet interval instead (bounded at 5 s).
-        def snap() = (jobs.get.toLong << 40) ^ (stages.get.toLong << 20) ^
-          tasks.get.toLong ^ (taskMs.get << 1)
-        var prev = -1L
-        var quietWaits = 0
-        while ({ val c = snap(); val same = c == prev; prev = c; !same } &&
-               quietWaits < 100) { quietWaits += 1; Thread.sleep(50) }
+        drain()
         println(f"$n%-42s wall=${wallMs / 1000}%7.2fs jobs=${jobs.get}%3d " +
           f"stages=${stages.get}%3d tasks=${tasks.get}%5d " +
           f"taskTime=${taskMs.get / 1000.0}%8.2fs " +

@@ -330,11 +330,24 @@ class StreamsSpec extends SparkSpec {
     // exempt, but the skip must be visible on stderr
     val err = new java.io.ByteArrayOutputStream()
     val prevErr = System.err
-    System.setErr(new java.io.PrintStream(err, true))
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
     try batchGate("g", observed = 0, recorded = 1, min = 3)
     finally System.setErr(prevErr)
-    assert(err.toString.contains("g: multi-batch gate SKIPPED") &&
-      err.toString.contains("fixture recorded only 1 non-empty slice(s)"))
+    assert(err.toString("UTF-8").contains("g: multi-batch gate SKIPPED") &&
+      err.toString("UTF-8")
+        .contains("fixture recorded only 1 non-empty slice(s)"))
+    // ASCII only: a POSIX-locale stderr prints anything else as '?'
+    assert(err.toByteArray.forall(_ >= 0), err.toString("UTF-8"))
+  }
+
+  test("an empty events table records 0 non-empty slices") {
+    // Spark writes one row-less part file for an empty table; only part
+    // files that hold rows count as recorded slices
+    val d = java.nio.file.Files.createTempDirectory("graft-empty-ev").toString
+    spark.read.parquet(s"$sf/events.parquet").limit(0).coalesce(1)
+      .write.parquet(s"$d/events.parquet")
+    assert(graft.queries.Events.recordedSlices(spark, d) == 0)
+    assert(graft.queries.Events.recordedSlices(spark, sf) == 3)
   }
 
   test("funnel state machine carries step dependencies across batches") {
