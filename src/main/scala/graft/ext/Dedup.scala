@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Rounds
 
 /** Deduplication family for training-data pipelines (SURVEY.md §2.9 D1-D3):
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard. Embedding-cosine
@@ -181,40 +182,24 @@ object Dedup {
     * must be >= the maximum graph distance from any node to its
     * component's minimum-id node; near-dup components are near-cliques
     * (distance ~1-2), so a small fixed budget suffices there, but a CHAIN
-    * component of length > rounds would silently under-merge — pass
-    * `verifyConverged = true` to turn that silence into a loud failure
-    * (one extra propagation round + a single count at the end asserts a
-    * fixed point was reached). GraphX could do this too, but the DataFrame
+    * component of length > rounds would under-merge — so one extra
+    * propagation round + a single count at the end asserts a fixed point
+    * was reached ([[graft.ops.Rounds.requireFixpoint]]) and a too-deep
+    * input fails loudly. GraphX could do this too, but the DataFrame
     * form keeps it inside Catalyst (pruning, AQE) and oracle-checkable.
     *
     * Lineage truncation is mandatory (each round would otherwise re-embed
-    * the full upstream subplan; measured 81s → 3s at sf0.1) and comes in
-    * two flavors:
-    *  - `checkpointDir = None`: `localCheckpoint(eager)` — fastest, but
-    *    executor-memory-resident and lost on executor failure. Right for
-    *    local/interactive runs.
-    *  - `checkpointDir = Some(dir)`: reliable `checkpoint(eager)` into the
-    *    given directory (HDFS/object store on a real cluster) — survives
-    *    executor loss, the correct choice for a 100 TB run where round k's
-    *    state is hours of work.
+    * the full upstream subplan; measured 81s → 3s at sf0.1): every round
+    * is landed by [[graft.ops.Rounds]] (an eager `localCheckpoint`).
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          rounds: Int,
-                          checkpointDir: Option[String] = None,
-                          verifyConverged: Boolean = false): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        pairs.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(eager = true)
-    }
+                          rounds: Int): DataFrame = {
     // Materialize the (possibly expensive) edge derivation ONCE.
-    val edges = cut(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct())
+    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+      .distinct()
+      .localCheckpoint(eager = true)
     val nodes = edges.select(col("src").as("node")).distinct()
-    var labels = cut(nodes.withColumn("label", col("node")))
     def propagate(ls: DataFrame): DataFrame = {
       val neighborMin = edges
         .join(ls, edges("dst") === ls("node"))
@@ -223,19 +208,13 @@ object Dedup {
         .select(col("node"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
     }
-    for (_ <- 1 to rounds) labels = cut(propagate(labels))
-    if (verifyConverged) {
-      // One more round must be a fixed point; a single scalar action, so
-      // the plan stays static (this is an assertion, not a driver loop).
-      val changed = propagate(labels).as("p")
-        .join(labels.as("l"), "node")
-        .filter(col("p.label") < col("l.label"))
-        .count()
-      require(changed == 0,
-        s"connectedComponents: not converged after $rounds rounds " +
-          s"($changed labels still changing) — raise `rounds` " +
-          "(component diameter exceeds the budget)")
-    }
+    val (labels, n) = Rounds.iterate(nodes.withColumn("label", col("node")),
+      rounds)((ls, _) => propagate(ls)).last
+    // One more round must be a fixed point; a single scalar action, so
+    // the plan stays static (this is an assertion, not a driver loop).
+    // Min-propagation only lowers labels, so "changed" is "lowered".
+    Rounds.requireFixpoint("Dedup.connectedComponents", rounds,
+      Rounds.changedRows(labels, propagate(labels), "node", "label"), n)
     labels.select(col("node"), col("label").as("component"))
   }
 

@@ -244,7 +244,7 @@ object Similarity {
     * against the corpus scan with a per-row fold argmin ([[nearestBy]] —
     * zero Exchange, no k-fold duplication of the vectors), one posexplode +
     * partial-aggregated hash aggregation on (cell, dim) — k·dim groups.
-    * Lineage is cut per round so the plan stays flat. */
+    * Each round is landed by [[graft.ops.Rounds]] so the plan stays flat. */
   def kmeansCentroids(embeddings: DataFrame, k: Int, rounds: Int,
                       seedBound: String = "1"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -277,19 +277,19 @@ object Similarity {
       .withColumn("rk", row_number().over(seedW))
       .select((col("rk") - 1).cast("long").as("cent_id"),
         transform(col("embedding"), _.cast("double")).as("cvec"))
-      .localCheckpoint(true)
     // Decide the seed SOURCE with a count-only pass first: the filter
     // touches nothing but vec_id (column-pruned scan, no embedding IO,
     // no sort), so settling sample-vs-full before ranking is cheaper
     // than the old rank-then-count — which, on a shortfall, had already
     // eagerly checkpointed the discarded sample ranking and left it
     // pinned until the periodic-GC sweep (r14 ADVICE). The checkpointed
-    // seed set is now built exactly once, from the chosen source.
+    // seed set (Rounds.iterate lands it) is built exactly once, from the
+    // chosen source.
     val sampleN = embeddings.filter(h < lit(seedBound)).count()
-    var cents = rankSeeds(
+    val seeds = rankSeeds(
       if (sampleN < k) embeddings
       else embeddings.filter(h < lit(seedBound)))
-    for (_ <- 1 to rounds) {
+    graft.ops.Rounds.iterate(seeds, rounds) { (cents, _) =>
       val assigned = nearestBy(embeddings, cents, l2sq)
       val means = assigned
         .select(col("cent_id"), posexplode(col("embedding")).as(Seq("i", "v")))
@@ -301,11 +301,9 @@ object Similarity {
         .groupBy("cent_id")
         .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
           e => e.getField("m")).as("nvec"))
-      cents = cents.join(means, Seq("cent_id"), "left")
+      cents.join(means, Seq("cent_id"), "left")
         .select(col("cent_id"), coalesce(col("nvec"), col("cvec")).as("cvec"))
-        .localCheckpoint(true)
-    }
-    cents
+    }.last._1
   }
 
   /** Batch cell assignment for a trained codebook — at scale this is the

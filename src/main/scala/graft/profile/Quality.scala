@@ -65,11 +65,6 @@ object Quality {
     left.join(r, keys, "left_semi").agg(count(lit(1)).as("n_matched"))
   }
 
-  /** Per-group duplicate audit detail (group keys + multiplicity), used by
-    * dedup diagnostics. Deterministic output requires caller to ORDER BY. */
-  def duplicateGroups(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-
   /** Generic table profile: one output row per column with null count,
     * distinct cardinality, and min/max (string-rendered for type
     * uniformity). The reference's whole `data_analysis.py` generalized to

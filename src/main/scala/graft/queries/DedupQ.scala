@@ -437,10 +437,9 @@ object DedupQ {
         // True near-dup components at threshold 0.5 are tiny cliques
         // (measured: max component 4 nodes, min-label converges in 1
         // round at sf0.001/0.01/0.1); 6 one-hop rounds leaves margin,
-        // and verifyConverged turns a too-chainy corpus into a loud
+        // and the fixpoint guard turns a too-chainy corpus into a loud
         // failure instead of a silent under-merge vs the closure oracle.
-        Dedup.connectedComponents(pairs, "id_a", "id_b", rounds = 6,
-            verifyConverged = true)
+        Dedup.connectedComponents(pairs, "id_a", "id_b", rounds = 6)
           .orderBy("node")
       },
       s"""WITH RECURSIVE $duckVerifiedCtes,

@@ -3,11 +3,12 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.io.Tables
+import graft.ops.Rounds
 
 /** Link-analysis pack: iterative graph algorithms expressed as fixed-round
   * DataFrame dataflows (static plans, no driver convergence loop on the
-  * hot path — the same discipline as `Dedup.connectedComponents` and
-  * `Similarity.kmeansCentroids`).
+  * hot path; every round's state is landed by `ops.Rounds`, as in
+  * `Dedup.connectedComponents` and `Similarity.kmeansCentroids`).
   *
   * Graph source: the part CO-PURCHASE graph — an undirected edge (a, b)
   * whenever parts a and b appear in the same order. This is the canonical
@@ -28,7 +29,7 @@ import graft.io.Tables
 object GraphQ {
 
   private val Damping = 0.85
-  private val Rounds = 5
+  private val PagerankRounds = 5
   private val HitsRounds = 3
   private val WalkSteps = 4
   /** HITS quantization scale. Only NORMALIZED scores (∈ [0,1]) are ever
@@ -162,7 +163,7 @@ object GraphQ {
     // partition). Edges are built ONCE (one self-join shuffle on the
     // order key + distinct) and localCheckpointed, so the 5 iterations
     // re-read a materialized narrow table instead of replaying the join;
-    // lineage is cut per round exactly like kmeansCentroids. When the
+    // each round's rank vector is landed by ops.Rounds. When the
     // rank vector outgrows broadcast (web-scale node counts), the same
     // loop runs with edges bucketed by src and a co-partitioned
     // shuffle join — the plan shape is a config, not a rewrite.
@@ -174,19 +175,17 @@ object GraphQ {
         val e0 = coPurchaseEdges(s, d)
         val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
         val edges = e0.join(deg, "src").localCheckpoint(true)
-        val nodes = e0.select(col("src").as("node")).distinct()
-          .localCheckpoint(true)
-        val n = nodes.count()
+        val (nodes, n) =
+          Rounds.land(e0.select(col("src").as("node")).distinct())
         // empty graph (degenerate fixture): zero nodes in, zero rank
         // rows out — 1.0/max(n,1) keeps the literal finite; it scales
         // zero rows either way
-        var ranks = nodes
+        val init = nodes
           .select(col("node"), lit(1.0 / math.max(n, 1L)).as("pr"))
-          .localCheckpoint(true)
-        for (_ <- 1 to Rounds)
-          ranks = pagerankRound(edges, nodes, ranks,
-            0.15 / math.max(n, 1L), hintBroadcast = n <= 1000000L)
-            .localCheckpoint(true)
+        val (ranks, _) = Rounds.iterate(init, PagerankRounds) { (r, rows) =>
+          pagerankRound(edges, nodes, r, 0.15 / math.max(n, 1L),
+            hintBroadcast = rows <= Rounds.BroadcastRows)
+        }.last
         ranks.orderBy(desc("pr"), asc("node")).limit(20)
       },
       // MATERIALIZED: each round references e and nodes, so DuckDB's
@@ -204,8 +203,8 @@ object GraphQ {
          |nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS nd
          |       FROM nodes),
          |r0 AS (SELECT node, 1.0 / (SELECT nd FROM nn) AS pr FROM nodes),
-         |${(1 to Rounds).map(duckRound).mkString(",\n")}
-         |SELECT node, pr FROM r$Rounds ORDER BY pr DESC, node LIMIT 20""".stripMargin),
+         |${(1 to PagerankRounds).map(duckRound).mkString(",\n")}
+         |SELECT node, pr FROM r$PagerankRounds ORDER BY pr DESC, node LIMIT 20""".stripMargin),
 
     // k-core decomposition (fixed-round peeling): repeatedly delete nodes
     // of degree < k from the co-purchase graph — the density filter a
@@ -221,12 +220,11 @@ object GraphQ {
     // narrow node list). Per round: two broadcast semi-joins of the
     // edge scan against the kept set (co-partitioned shuffle join at
     // web scale) + one keyed degree agg. 5 rounds is a BUDGET, not the
-    // semantics: like Dedup.connectedComponents' verifyConverged, a
-    // scalar fixpoint assertion (round-5 kept set == round-4 kept set;
-    // counts suffice since each round's kept set is a subset of the
-    // previous round's, and edges_i changes iff kept_i does) turns a
-    // too-deep graph into a loud failure instead of a silent
-    // not-quite-core (retained nodes with degree < k).
+    // semantics: Rounds.requireFixpoint (round-5 kept set == round-4
+    // kept set; the landed counts suffice since each round's kept set
+    // is a subset of the previous round's, and edges_i changes iff
+    // kept_i does) turns a too-deep graph into a loud failure instead of
+    // a silent not-quite-core (retained nodes with degree < k).
     "graph_kcore" -> QuerySpec(
       (s, d) => {
         val K = 8
@@ -253,19 +251,13 @@ object GraphQ {
           .groupBy(col("src").as("node"))
           .agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= K)
-        var kept = peel(e0).localCheckpoint(true)
-        var prevKept = kept
-        for (_ <- 2 to 5) {
-          prevKept = kept
-          kept = peel(restrict(kept.select("node"))).localCheckpoint(true)
+        val rounds = Rounds.iterate(peel(e0), 4) { (kept, _) =>
+          peel(restrict(kept.select("node")))
         }
         // Loud truncation guard: if the last peel still removed nodes,
         // the 5-round unroll has NOT reached the true k-core.
-        val (nPrev, nLast) = (prevKept.count(), kept.count())
-        require(nLast == nPrev,
-          s"graph_kcore: peeling not converged after 5 rounds " +
-            s"($nPrev -> $nLast nodes in the final round) — raise the " +
-            "round budget (graph peels deeper than the unroll)")
+        val (kept, nLast) = rounds.last
+        Rounds.requireFixpoint("graph_kcore", 5, Rounds.dropped(rounds), nLast)
         // kept_5 == kept_4 (each round's kept set is a subset of the
         // previous one, and the guard just asserted equal counts), so
         // restrict(kept_5) == restrict(kept_4) and round 5's degree
@@ -332,6 +324,8 @@ object GraphQ {
         val seed = s.range(1)
           .select(seedCol.as("node"), lit(0L).as("hops"))
           .localCheckpoint(true)
+        // Inline, not Rounds.iterate: each hop's step reads the whole hop
+        // history (the visited union), not just the previous round.
         var hopTables = List(seed)
         var frontier = seed.select("node")
         for (i <- 1 to 4) {
@@ -712,8 +706,8 @@ object GraphQ {
     // once per session — the basket-rules shape), so the backbone is a
     // filter over the materialized table; each round broadcasts the
     // label vector against the edge scan (edges never reshuffle),
-    // aggregates map-side, and cuts lineage via localCheckpoint — the
-    // LPA discipline.
+    // aggregates map-side, and is landed by ops.Rounds — the LPA
+    // discipline.
     "graph_connected_components" -> QuerySpec(
       (s, d) => {
         // backbone = a filter over the SHARED support-carrying edge
@@ -725,25 +719,21 @@ object GraphQ {
           .filter(col("support") >= 3)
           .select(col("src"), col("dst"))
           .localCheckpoint(true)
-        var labels = edges.select(col("src").as("node")).distinct()
+        val init = edges.select(col("src").as("node")).distinct()
           .select(col("node"), col("node").as("label"))
-          .localCheckpoint(true)
         // size-aware per-round residency bound, same dial as
         // pagerankRound/lpaRound: a label vector past ~1M nodes rides
         // a shuffle join instead of six broadcast hash tables
-        val nNodes = labels.count()
-        for (_ <- 1 to 6) {
-          val lside =
-            if (nNodes <= 1000000L) broadcast(labels) else labels
+        val (labels, _) = Rounds.iterate(init, 6) { (ls, rows) =>
+          val lside = if (rows <= Rounds.BroadcastRows) broadcast(ls) else ls
           val minIn = edges
-            .join(lside, edges("src") === labels("node"))
+            .join(lside, edges("src") === ls("node"))
             .groupBy(col("dst")).agg(min("label").as("minl"))
-          labels = labels.join(minIn, labels("node") === minIn("dst"), "left")
+          ls.join(minIn, ls("node") === minIn("dst"), "left")
             .select(col("node"),
               least(col("label"), coalesce(col("minl"), col("label")))
                 .as("label"))
-            .localCheckpoint(true)
-        }
+        }.last
         labels.groupBy("label").agg(count(lit(1)).as("n_nodes"))
           .orderBy(desc("n_nodes"), asc("label")).limit(10)
       },
@@ -797,19 +787,18 @@ object GraphQ {
           .localCheckpoint(true)
         val seeds = adj.select(col("node").as("seed"))
           .orderBy("seed").limit(20)
-        var walk = seeds.select(col("seed"), col("seed").as("cur"))
-        var visits: org.apache.spark.sql.DataFrame = null
-        for (t <- 1 to WalkSteps) {
-          walk = adj.join(broadcast(walk), walk("cur") === adj("node"))
+        // Rounds.land per step, not Rounds.iterate: the seed walk is not
+        // landed, and step t hashes its own index t.
+        val walks = (1 to WalkSteps).scanLeft(
+            seeds.select(col("seed"), col("seed").as("cur"))) { (walk, t) =>
+          Rounds.land(adj.join(broadcast(walk), walk("cur") === adj("node"))
             .select(col("seed"), element_at(col("nbrs"),
               (graft.ext.TextOps.hash64(
                 concat_ws(":", col("cur"), lit(t))) % col("deg") + 1)
-                .cast("int")).as("cur"))
-            .localCheckpoint(true)
-          val v = walk.select(col("cur").as("node"))
-          visits = if (visits == null) v else visits.unionAll(v)
+                .cast("int")).as("cur")))._1
         }
-        visits.groupBy("node").agg(count(lit(1)).as("visits"))
+        walks.tail.map(_.select(col("cur").as("node"))).reduce(_ unionAll _)
+          .groupBy("node").agg(count(lit(1)).as("visits"))
           .orderBy(desc("visits"), asc("node")).limit(20)
       },
       {
@@ -884,6 +873,8 @@ object GraphQ {
         var h = o.select(col("src").as("node")).distinct()
           .select(col("node"), lit(1.0).as("s")).localCheckpoint(true)
         var a: org.apache.spark.sql.DataFrame = null
+        // Inline, not Rounds.iterate: a round is two half-steps (hubs
+        // and authorities), and no round needs a count.
         // r16: checkpoint the RAW mass table (node, rs) and normalize
         // lazily off the checkpoint. normalizeScaled references `raw`
         // twice (under the n2 agg that builds the broadcast, and as the
@@ -1130,21 +1121,14 @@ object GraphQ {
       : (org.apache.spark.sql.DataFrame, Long) =
     lpaCache.getOrBuild(s, d) {
       val edges = affinityBackbone(s, d)
-      var labels = edges.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("label"))
-        .localCheckpoint(true)
-      // checkpointed: the count reads materialized blocks, no recompute
-      val n = labels.count()
-      var prev = labels
-      for (_ <- 1 to 3) {
-        prev = labels
-        labels = lpaRound(edges, labels, hintBroadcast = n <= 1000000L)
-          .localCheckpoint(true)
+      val rounds = Rounds.iterate(
+          edges.select(col("src").as("node")).distinct()
+            .select(col("node"), col("node").as("label")), 3) {
+        (ls, rows) =>
+          lpaRound(edges, ls, hintBroadcast = rows <= Rounds.BroadcastRows)
       }
-      val nChanged = labels
-        .join(prev.withColumnRenamed("label", "prev_label"), "node")
-        .filter(col("label") =!= col("prev_label")).count()
-      (labels, nChanged)
+      val Seq(prev, labels) = rounds.takeRight(2).map(_._1)
+      (labels, Rounds.changedRows(prev, labels, "node", "label"))
     }
 
   /** Benchmark hook: run the shared LPA rounds NOW so the label build

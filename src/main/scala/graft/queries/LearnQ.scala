@@ -120,15 +120,14 @@ object LearnQ {
     logregCache.getOrBuild(s, d) {
       val toks = TextOps.tokens(col("text"))
       val nt = size(toks).cast("double")
-      val ft = Tables.documents(s, d)
+      val (ft, rows) = graft.ops.Rounds.land(Tables.documents(s, d)
         .select(
           when(col("lang") === "en", lit(1.0)).otherwise(lit(0.0)).as("y"),
           (size(toks).cast("double") / lit(100.0)).as("x1"),
           (size(array_distinct(toks)).cast("double") / nt).as("x2"),
           (aggregate(toks, lit(0L), (a, t) => a + length(t).cast("long"))
-            .cast("double") / nt / lit(10.0)).as("x3"))
-        .localCheckpoint(true)
-      val n = ft.count().toDouble
+            .cast("double") / nt / lit(10.0)).as("x3")))
+      val n = rows.toDouble
       // empty corpus: the gradient is 0/0 — weights are NaN, which every
       // consumer emits as SQL-NULL (wlit), exactly the oracle's
       // NULL-propagating sum chain; no GD round runs (nothing to scan)
@@ -239,9 +238,9 @@ object LearnQ {
     "learn_pca_power_iteration" -> QuerySpec(
       (s, d) => {
         import s.implicits._
-        val emb = Tables.embeddings(s, d).select(col("embedding"))
-          .localCheckpoint(true)
-        val nd = emb.count().toDouble
+        val (emb, rows) = graft.ops.Rounds.land(
+          Tables.embeddings(s, d).select(col("embedding")))
+        val nd = rows.toDouble
         // degenerate corpus (empty, or zero variance so the quantized
         // power-iterate norm underflows): the oracle's NULL-propagating
         // division chain emits 64 (dim, NULL, NULL, NULL) rows — mirror

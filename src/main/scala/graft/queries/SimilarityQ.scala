@@ -380,10 +380,10 @@ object SimilarityQ {
           else None
         val rankedFull =
           if (fromFull.nonEmpty) Some(ranked(emb, fromFull.max)) else None
-        var cents = ks.map { k =>
+        val seeds = ks.map { k =>
           val src = if (sampleN >= k) rankedSample.get else rankedFull.get
           src.filter(col("cent_id") < k).withColumn("k", lit(k.toLong))
-        }.reduce(_ unionAll _).localCheckpoint(true)
+        }.reduce(_ unionAll _)
         def packedByK(c: org.apache.spark.sql.DataFrame) = c.groupBy("k")
           .agg(array_sort(collect_list(struct(col("cent_id"), col("cvec"))))
             .as("cents"))
@@ -391,8 +391,8 @@ object SimilarityQ {
           array_min(transform(cents, c =>
             struct(Similarity.l2sq(col("embedding"), c.getField("cvec"))
               .as("d"), c.getField("cent_id").as("cent_id"))))
-        for (_ <- 1 to 2) {
-          val assigned = emb.crossJoin(broadcast(packedByK(cents)))
+        val (cents, _) = graft.ops.Rounds.iterate(seeds, 2) { (prev, _) =>
+          val assigned = emb.crossJoin(broadcast(packedByK(prev)))
             .select(col("k"), col("embedding"),
               bestOf(col("cents")).getField("cent_id").as("cent_id"))
           val means = assigned
@@ -407,11 +407,10 @@ object SimilarityQ {
             .agg(transform(
               array_sort(collect_list(struct(col("i"), col("m")))),
               e => e.getField("m")).as("nvec"))
-          cents = cents.join(means, Seq("k", "cent_id"), "left")
+          prev.join(means, Seq("k", "cent_id"), "left")
             .select(col("k"), col("cent_id"),
               coalesce(col("nvec"), col("cvec")).as("cvec"))
-            .localCheckpoint(true)
-        }
+        }.last
         val grouped = emb.crossJoin(broadcast(packedByK(cents)))
           .select(col("k"), bestOf(col("cents")).getField("d").as("d2"))
           .groupBy("k")

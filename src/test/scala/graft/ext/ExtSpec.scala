@@ -69,30 +69,31 @@ class ExtSpec extends SparkSpec {
   test("connected components: two clusters + a bridge collapse to min labels") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 10L), (20L, 21L))
       .toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs, "id_a", "id_b", rounds = 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val df = Dedup.connectedComponents(pairs, "id_a", "id_b", rounds = 6)
+    // lineage is cut every round: the final plan is a flat scan of the
+    // last checkpoint, not 6 nested self-joins
+    val planStr = df.queryExecution.optimizedPlan.toString
+    assert(!planStr.contains("Join"),
+      s"checkpointed plan should not re-embed join rounds:\n$planStr")
+    val cc = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(1L, 2L, 3L, 10L, 11L).forall(cc(_) == 1L)) // bridged cluster
     assert(cc(20L) == 20L && cc(21L) == 20L)
   }
 
-  test("connected components: reliable checkpoint mode matches local mode") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 10L), (20L, 21L))
-      .toDF("id_a", "id_b")
-    val reliable = Dedup.connectedComponents(pairs, "id_a", "id_b",
-        rounds = 6, checkpointDir = Some(dir))
-    // lineage is cut every round: the final plan is a flat scan of the
-    // last checkpoint, not 6 nested self-joins
-    val planStr = reliable.queryExecution.optimizedPlan.toString
-    assert(!planStr.contains("Join"),
-      s"checkpointed plan should not re-embed join rounds:\n$planStr")
-    val got = reliable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = Dedup.connectedComponents(pairs, "id_a", "id_b", rounds = 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == local)
-    // checkpoint files actually landed in the reliable dir
-    assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .iterator().hasNext, "no checkpoint data written")
+  test("connected components: a chain deeper than the round budget throws") {
+    // 1-2-...-8: node 8 is 7 hops from the minimum id; labels advance
+    // one hop per round
+    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(chain, "id_a", "id_b", rounds = 3))
+    // after 3 rounds nodes 5..8 still carry labels 2..5; the 4th round
+    // lowers all four
+    assert(e.getMessage.contains("Dedup.connectedComponents") &&
+      e.getMessage.contains("after 3 rounds") &&
+      e.getMessage.contains("changed 4 rows, 8 rows left"), e.getMessage)
+    // a budget that covers the diameter converges to one component
+    assert(Dedup.connectedComponents(chain, "id_a", "id_b", rounds = 7)
+      .collect().forall(_.getLong(1) == 1L))
   }
 
   test("connected components agree with GraphX on a random pair set") {

@@ -117,7 +117,7 @@ class TrainPrepSpec extends SparkSpec {
     // connected components over an empty edge list: empty result, no throw
     val noEdges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(noEdges, "id_a", "id_b",
-      rounds = 2, verifyConverged = true).count() == 0)
+      rounds = 2).count() == 0)
     // chunking a single-token doc: one chunk of one token
     val one = Seq(Seq("tok")).toDF("toks")
       .select(explode(sequence(lit(0), size(col("toks")) - 1, lit(25)))
