@@ -2,13 +2,25 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Rounds
 
 /** The end-to-end integration pipeline — the engine re-expression of the
   * reference's `import_to_mySQL()` (`/root/reference/insert.py:87-191`).
   *
   * Input: raw (un-renamed) contacts / contracts / relations frames as read
   * from the source files. Output: the four conformed tables the reference
-  * loads into MySQL, as lazy DataFrames.
+  * loads into MySQL.
+  *
+  * `run` is not lazy: like the reference, which conforms each source once
+  * in memory before loading it (insert.py:93-129), it lands the conformed
+  * contacts and the conformed contracts with [[graft.ops.Rounds.land]],
+  * two eager jobs. Every [[Output]] frame is planned over those landed
+  * blocks, so each audit or sink reads them instead of re-reading the
+  * CSVs and re-running the conform chain (phone included) per consumer.
+  * The trade is the one `Rounds` makes: the landed blocks have no
+  * lineage, so an executor lost after `run` fails the later audit or
+  * sink, and the pipeline must be rerun from `run`. The blocks are freed
+  * by Spark's context cleaner once the `Output` is unreachable.
   *
   * Divergences from the reference, all deliberate (SURVEY.md §1, §2.4):
   *  - surrogate ids are deterministic sha2 over the natural key
@@ -20,10 +32,13 @@ import org.apache.spark.sql.functions._
   *  - phone validity is the NSN-length reduction of libphonenumber's
   *    `is_possible_number` (see [[Phone]]).
   *
-  * Plan shape at scale: three scans → partition-local conform/id columns →
-  * one union → one dedup shuffle for `entities`; contacts/contracts never
-  * shuffle at all. The reference's O(n²) driver-side loops
-  * (insert.py:134-166) do not exist here.
+  * Plan shape at scale: two landing jobs (scan → partition-local
+  * conform/id columns); over the landed blocks, one union with the
+  * relation endpoints → one dedup shuffle for `entities`, one keep-first
+  * window shuffle for `contacts`, none for `contracts`. The landed blocks
+  * are executor block storage (memory, spilling to local disk). The
+  * reference's O(n²) row-by-row Python loops (insert.py:134-166) do not
+  * exist here.
   */
 object Pipeline {
 
@@ -40,21 +55,24 @@ object Pipeline {
           relationsRaw: DataFrame): Output = {
 
     // Conform: positional rename (insert.py:102-107) + date parsing
-    // (insert.py:110-115) + phone normalization (insert.py:118).
-    val contacts = Conform.rename(contactsRaw, Conform.contactColumns)
-      .withColumn("birthday", Conform.parseDateFr(col("birthday")))
-      .withColumn("phone_number", Phone.normalize(col("phone_number")))
+    // (insert.py:110-115) + phone normalization (insert.py:118), each
+    // source landed once (see scaladoc).
+    val (contacts, _) = Rounds.land(Phone.normalized(
+        Conform.rename(contactsRaw, Conform.contactColumns)
+          .withColumn("birthday", Conform.parseDateFr(col("birthday"))),
+        "phone_number", "phone_number")
       .withColumn("entity_id", Identity.surrogateId(
-        col("name"), col("first_name"), col("birthday"), col("entity_type")))
+        col("name"), col("first_name"), col("birthday"), col("entity_type"))))
 
-    val contracts = Conform.rename(contractsRaw, Conform.contractColumns)
-      .withColumn("birthday", Conform.parseDateFr(col("birthday")))
-      .withColumn("open_at", Conform.parseDateFr(col("open_at")))
-      .withColumn("date_price", Conform.parseDateFr(col("date_price")))
-      .withColumn("entity_type",
-        Conform.entityType(col("first_name"), col("birthday")))
-      .withColumn("entity_id", Identity.surrogateId(
-        col("name"), col("first_name"), col("birthday"), col("entity_type")))
+    val (contracts, _) = Rounds.land(
+      Conform.rename(contractsRaw, Conform.contractColumns)
+        .withColumn("birthday", Conform.parseDateFr(col("birthday")))
+        .withColumn("open_at", Conform.parseDateFr(col("open_at")))
+        .withColumn("date_price", Conform.parseDateFr(col("date_price")))
+        .withColumn("entity_type",
+          Conform.entityType(col("first_name"), col("birthday")))
+        .withColumn("entity_id", Identity.surrogateId(
+          col("name"), col("first_name"), col("birthday"), col("entity_type"))))
 
     val relations = Conform.rename(relationsRaw, Conform.relationColumns)
       .withColumn("birthday_s", Conform.parseDateIso(col("birthday_s")))

@@ -3,15 +3,21 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-/** Per-round state of a driver-unrolled iteration (PageRank, label
-  * propagation, k-core peeling, min-label components, Lloyd rounds).
+/** Eager cuts: per-round state of an iteration unrolled in Scala (PageRank,
+  * label propagation, k-core peeling, min-label components, Lloyd
+  * rounds), and any frame that several later actions read (the E1
+  * pipeline's conformed sources).
   *
-  * Each round's state is cut from its lineage with an eager
-  * `localCheckpoint`, so round k re-reads k-1's materialized blocks
-  * instead of replaying every earlier round. The cut also counts: a
-  * fresh [[Observation]] rides the checkpoint's own job, so the row
-  * count costs no second job. The landed frame's plan is still a bare
-  * `LogicalRDD`; the observation shows only in the checkpoint job.
+  * Each state is cut from its lineage with an eager `localCheckpoint`,
+  * so round k re-reads k-1's materialized blocks instead of replaying
+  * every earlier round, and each consumer of a landed frame reads its
+  * blocks instead of recomputing it. The cut also counts: a fresh
+  * [[Observation]] rides the checkpoint's own job, so the row count
+  * costs no second job. The landed frame's plan is still a bare
+  * `LogicalRDD`; the observation shows only in the checkpoint job. The
+  * blocks have no lineage: a lost executor fails the next action that
+  * reads them, and Spark's cleaner frees them once the frame is
+  * unreachable.
   *
   * A fixed round count is a budget, not the semantics: where the
   * answer is a fixpoint, [[requireFixpoint]] turns a too-deep input
@@ -24,8 +30,8 @@ object Rounds {
     * broadcast starve execution memory at 0.75 GB/core). */
   val BroadcastRows = 1000000L
 
-  /** `df` cut by an eager `localCheckpoint`, and its row count, read off
-    * the checkpoint's own job. */
+  /** `df` cut by an eager `localCheckpoint` (one job), and its row count,
+    * read off that job. */
   def land(df: DataFrame): (DataFrame, Long) = {
     val obs = Observation()
     val cut = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)

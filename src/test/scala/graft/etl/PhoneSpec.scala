@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.SparkSpec
 
 /** Branch-exhaustive table for Phone.normalize against ground truth derived
@@ -53,14 +53,37 @@ class PhoneSpec extends SparkSpec {
     (null: String) -> null
   )
 
+  /** The branch table's inputs, in order, plus a row index. */
+  def branchInputs = {
+    val schema = StructType(Seq(StructField("i", IntegerType, nullable = false),
+      StructField("phone", StringType, nullable = true)))
+    val rows = cases.zipWithIndex.map { case ((in, _), i) => Row(i, in) }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+
   test("phone normalization matches the reference branch table") {
-    val schema = StructType(Seq(StructField("phone", StringType, nullable = true)))
-    val rows = cases.map { case (in, _) => Row(in) }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), schema)
-    val got = df.select(Phone.normalize(col("phone"))).collect().map(_.getString(0))
+    val got = branchInputs.select(Phone.normalize(col("phone")))
+      .collect().map(_.getString(0))
     cases.zip(got).foreach { case ((in, want), g) =>
       assert(g == want, s"input=$in got=$g want=$want")
+    }
+  }
+
+  test("Phone.normalized equals Phone.normalize on the branch table") {
+    val df = branchInputs
+    val into = Phone.normalized(df, "phone", "intl")
+    assert(into.columns.toSeq == Seq("i", "phone", "intl"))
+    val inPlace = Phone.normalized(df, "phone", "phone")
+    assert(inPlace.columns.toSeq == Seq("i", "phone"))
+    val got = into.join(inPlace.withColumnRenamed("phone", "in_place"), "i")
+      .select(col("i"), col("intl"), col("in_place"),
+        Phone.normalize(col("phone")).as("want"))
+      .orderBy("i").collect()
+    assert(got.length == cases.length)
+    got.foreach { r =>
+      val (in, _) = cases(r.getInt(0))
+      assert(r.getString(1) == r.getString(3), s"input=$in")
+      assert(r.getString(2) == r.getString(3), s"input=$in (in place)")
     }
   }
 

@@ -1,5 +1,7 @@
 package graft.etl
 
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -91,6 +93,31 @@ class PipelineSpec extends SparkSpec {
         to_date(col("birthday")) === lit("1990-07-15").cast("date"))
       .select("address").head().getString(0)
     assert(address == "5 avenue Foch")
+  }
+
+  test("a duplicated contract number fails the PK audit after the landing") {
+    val dup = Pipeline.run(contactsRaw,
+      contractsRaw.unionByName(contractsRaw.filter(col("numero") === "C001")),
+      relationsRaw)
+    val e = intercept[IllegalArgumentException](Writers.assertPrimaryKey(
+      dup.contracts, Seq("contract_number"), "contracts"))
+    assert(e.getMessage.contains("violated by 1 keys"), e.getMessage)
+  }
+
+  test("no output frame rescans a source: contacts and contracts are landed") {
+    val sources = Set("contacts.csv", "contrats.csv")
+    Seq("entities" -> (out.entities, 2), "contacts" -> (out.contacts, 1),
+        "contracts" -> (out.contracts, 1)).foreach {
+      case (name, (df, landed)) =>
+        val plan = df.queryExecution.optimizedPlan
+        val scanned = plan.collect { case r: LogicalRelation => r.relation }
+          .collect { case h: HadoopFsRelation => h.location.rootPaths }
+          .flatten.map(_.getName)
+        assert(scanned.forall(f => !sources.contains(f)),
+          s"$name rescans a source: $scanned\n$plan")
+        assert(plan.collect { case r: LogicalRDD => r }.size == landed,
+          s"$name: want $landed landed leaves\n$plan")
+    }
   }
 
   test("pipeline is idempotent: re-run produces identical entity ids") {
