@@ -27,7 +27,7 @@ END = "<!-- REGISTRY-INDEX:END -->"
 
 # tag -> regex over the lower-cased comment block; ordered by priority
 TAGS = [
-    ("shared-stage", r"shared (edge |pair |label |census |train |codebook |stage|lsh)|sessionscopedcache|rides the shared|shared stage|shared co-purchase|shared lpa|shared n-gram|shared census"),
+    ("shared-stage", r"shared (edge |pair |label |census |train |codebook |stage|lsh)|sessionscopedcache|sharedstage|rides the shared|shared stage|shared co-purchase|shared lpa|shared n-gram|shared census"),
     ("skew-split", r"skew|head/tail|zipf"),
     ("broadcast", r"broadcast"),
     ("bucketed", r"bucket(ed|by|ing)"),

@@ -55,3 +55,43 @@ if [[ "${1:-}" == "--closing" ]]; then
     echo "preflight OK: closing-bench narrative present in PERF.md"
   fi
 fi
+
+# --runners: the two runner contracts at sf0.001 on a one-query subset.
+# Bench's last stdout line is the total JSON with a fixed key order, and
+# its detail line lists the eleven shared stages (SparkEntry.sharedStages)
+# first, in declared order; a Verify subset run leaves SUBSET_MARKER.json
+# and oracle_sql.json. A subset Bench run never rewrites BENCH_DETAIL.json.
+if [[ "${1:-}" == "--runners" ]]; then
+  sf=/root/testdata/sf0.001
+  out=$(mktemp -d /tmp/preflight_runners.XXXX)
+  SPARK_GRAFT_SF_DIR=$sf SPARK_GRAFT_ONLY=agg_pricing_summary \
+    SPARK_GRAFT_BENCH_RUNS=1 sbt -batch "runMain graft.Bench" \
+    < /dev/null 2>/dev/null > "$out/bench.out"
+  python3 - "$out/bench.out" <<'PY'
+import json, sys
+lines = [l for l in open(sys.argv[1]).read().splitlines() if l.strip()]
+total = json.loads(lines[-1])
+keys = ["metric", "value", "unit", "runs", "n_queries", "errors",
+        "detail", "queries", "sf"]
+assert list(total) == keys, f"total line keys {list(total)}"
+detail = json.loads(next(l for l in lines if l.startswith('{"metric":"detail"')))
+stages = ["dedup_lsh_shared_stage", "similarity_kmeans_shared_train",
+          "graph_edges_shared_stage", "graph_lpa_shared_labels",
+          "text_bpe_shared_train", "text_ngram_shared_census",
+          "multimodal_png_shared_encode", "multimodal_wav_shared_encode",
+          "learn_logreg_shared_train", "linkage_candidates_shared_stage",
+          "events_sliced_fixture"]
+got = list(detail["queries"])[:len(stages)]
+assert got == stages, f"detail starts with {got}"
+assert not total["errors"], f"bench errors: {total['errors']}"
+PY
+  echo "preflight OK: Bench stdout contract holds"
+  SPARK_GRAFT_ONLY=agg_pricing_summary \
+    sbt -batch "runMain graft.Verify $sf $out/verify" < /dev/null \
+    > /dev/null 2>&1
+  for f in SUBSET_MARKER.json oracle_sql.json; do
+    [[ -s "$out/verify/$f" ]] || { echo "Verify wrote no $f" >&2; exit 1; }
+  done
+  echo "preflight OK: Verify subset run writes its marker and oracle SQL"
+  rm -rf "$out"
+fi

@@ -21,4 +21,19 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.collect { case (k, QuerySpec(_, Some(sql), _)) => k -> sql }
+
+  /** Every shared build stage, in Bench's timing order (each entry's
+    * dependencies come before it: the LPA labels read the edge stage). */
+  def sharedStages: Seq[graft.util.SharedStage[_]] = {
+    import graft.queries._
+    Seq(DedupQ.lshVerifiedPairs, SimilarityQ.trainedCents8x2,
+      GraphQ.coPurchaseSupportEdges, GraphQ.lpaLabels, Text.trainedBpe,
+      Text.ngramCensus, MultimodalQ.pngAssets, MultimodalQ.wavAssets,
+      LearnQ.trainedLogreg, LinkageQ.linkageStage, Events.slicedFixtures)
+  }
+
+  /** `SPARK_GRAFT_ONLY`'s value as query-name prefixes: split on commas,
+    * trimmed, blanks dropped; None when unset (every entry selected). */
+  def onlyPrefixes(v: Option[String]): Option[Seq[String]] =
+    v.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
 }

@@ -1,46 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — used by the
-    // multi-process proof (local-cluster[N,c,mem] / a standalone master
-    // URL), where serialization, locality and executor-loss semantics
-    // actually cross a process boundary. The driver never sets it.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // Multi-process extras (only meaningful under a non-local master):
-    // executor JVMs need the application classes on their own classpath
-    // (local[*] shares the driver's), their heap sizing, and the JDK17
-    // --add-opens set the driver gets from build.sbt.
-    val execConfs = Seq(
-      "spark.executor.extraClassPath" -> "SPARK_GRAFT_EXEC_CLASSPATH",
-      "spark.executor.memory" -> "SPARK_GRAFT_EXEC_MEM",
-      "spark.executor.extraJavaOptions" -> "SPARK_GRAFT_EXEC_JAVAOPTS")
-    val spark = execConfs.foldLeft(
-      SparkSession.builder()
-      .master(master))((b, kv) =>
-        sys.env.get(kv._2).fold(b)(v => b.config(kv._1, v)))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Superseded per-round broadcasts/checkpoints of the iterative
-      // queries are reclaimed by the ContextCleaner only AFTER a driver
-      // GC; a 383-query sweep under a constrained heap can starve
-      // execution memory on dead blocks long before the JVM bothers to
-      // collect. One driver GC a minute keeps the cleaner fed (no-op
-      // cost when memory is ample).
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Superseded per-round broadcasts/checkpoints of the iterative
+    // queries are reclaimed by the ContextCleaner only AFTER a driver
+    // GC; a 383-query sweep under a constrained heap can starve
+    // execution memory on dead blocks long before the JVM bothers to
+    // collect. One driver GC a minute keeps the cleaner fed (no-op
+    // cost when memory is ample).
+    val spark = Session("graft-verify",
+      "spark.cleaner.periodicGC.interval" -> "1min")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated name prefixes); the driver
     // never sets it, so its runs always cover the full registry.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val only = SparkEntry.onlyPrefixes(sys.env.get("SPARK_GRAFT_ONLY"))
     // A stray SPARK_GRAFT_ONLY in a verification environment would shrink
     // coverage while the run still looked fully green — so a subset run is
     // LOUD on stderr and leaves a machine-readable marker in outDir that

@@ -25,9 +25,9 @@ import org.apache.spark.sql.functions._
   *     per calling code (from libphonenumber's published metadata —
   *     public data), with the ITU E.164 length envelope (4 ≤ NSN and
   *     CC+NSN ≤ 15 digits) as the fallback for unlisted codes. For the
-  *     two regions [[normalize]] can emit this reduces to NSN 10 (+1) /
-  *     NSN 9 (+33) — identical to the previous hardcoded rule, so
-  *     normalize hashes are unchanged. Impossible or empty → NULL.
+  *     two regions [[normalized]] can emit this reduces to NSN 10 (+1)
+  *     / NSN 9 (+33) — identical to the previous hardcoded rule, so
+  *     normalization hashes are unchanged. Impossible or empty → NULL.
   *
   * Known divergences (documented, covered by unit tests):
   *  - null input → NULL (the reference stringifies NaN to "nan", which then
@@ -107,25 +107,14 @@ object Phone {
     ccOk && lenOk
   }
 
-  /** International normalization; returns NULL for invalid numbers.
-    *
-    * Prefer [[normalized]] on hot paths: this single-Column form
-    * references the whole formatted candidate tree once per validity
-    * sub-check (no let-binding in the Column DSL), which leans on codegen
-    * subexpression elimination. */
-  def normalize(phoneRaw: Column): Column = {
-    val c = candidate(phoneRaw)
-    when(isPossibleNumber(c), c)
-  }
-
-  /** `df` with column `out` set to [[normalize]] of column `in` (`out`
-    * may equal `in`; an existing `out` keeps its position). Two
-    * projections: the [[candidate]] is bound to `out`, then gated in
-    * place with `when(isPossibleNumber(out), out)`, so the validity
-    * sub-checks read the bound attribute instead of re-inlining the
-    * candidate tree (CollapseProject never re-inlines a non-cheap,
-    * multiply-referenced alias). Measured at sf0.1: 1.18 s → ~0.5 s on
-    * phone_normalize. */
+  /** `df` with column `out` set to the international normalization of
+    * column `in`, NULL for invalid numbers (`out` may equal `in`; an
+    * existing `out` keeps its position). Two projections: the
+    * [[candidate]] is bound to `out`, then gated in place with
+    * `when(isPossibleNumber(out), out)`, so the validity sub-checks read
+    * the bound attribute instead of re-inlining the candidate tree
+    * (CollapseProject never re-inlines a non-cheap, multiply-referenced
+    * alias). Measured at sf0.1: 1.18 s → ~0.5 s on phone_normalize. */
   def normalized(df: DataFrame, in: String, out: String): DataFrame =
     df.withColumn(out, candidate(col(in)))
       .withColumn(out, when(isPossibleNumber(col(out)), col(out)))
@@ -165,9 +154,9 @@ object Phone {
         .otherwise(lit(""))
 
     // step 7; the general is_possible_number gate (step 8) is applied by
-    // [[normalized]] (or [[normalize]]) over this candidate. For the formats
-    // this chain emits it reduces to the previous hardcoded rule — "+1"
-    // with NSN 10 or "+33" with NSN 9 — byte-identical outputs.
+    // [[normalized]] over this candidate. For the formats this chain
+    // emits it reduces to the previous hardcoded rule — "+1" with NSN 10
+    // or "+33" with NSN 9 — byte-identical outputs.
     when(hasExt, concat(intl, lit("x"), ext)).otherwise(intl)
   }
 }

@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
 import graft.io.{Readers, Writers, Xlsx}
 
 /** CLI for the end-to-end integration pipeline — the drop-in replacement
@@ -20,15 +19,7 @@ import graft.io.{Readers, Writers, Xlsx}
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(contactsPath, contractsPath, relationsPath, outDir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-pipeline")
 
     val relations =
       if (relationsPath.endsWith(".xlsx")) Xlsx.read(spark, relationsPath)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.io.Tables
 import graft.ext.{Dedup, TextOps}
+import graft.util.SharedStage
 
 /** Deduplication pack over the documents table. Oracle SQL for the
   * signature stages is generated from the same (k, r, bits) parameters as
@@ -47,25 +48,13 @@ object DedupQ {
   // ---------------------------------------------------------------------
 
   /** One verified-pair build per (session, sf-dir): every consumer below
-    * filters this table instead of re-shingling the corpus. The cache holds
-    * only localCheckpointed narrow tables (ids + one double), so its
+    * filters this table instead of re-shingling the corpus. The stage
+    * holds only localCheckpointed narrow tables (ids + one double), so its
     * footprint is O(candidate pairs), not O(corpus); entries are evicted
-    * when their session's SparkContext stops (SessionScopedCache), so a
-    * long-lived driver cycling sessions does not accumulate dead pins. */
-  private val pairCache = new graft.util.SessionScopedCache[DataFrame]()
-
-  /** Benchmark hook: force the shared verified-pair stage to build NOW so
-    * it lands in its own timing entry — otherwise whichever of the four
-    * consumers runs first absorbs the whole build and per-query numbers
-    * become order-dependent. */
-  def buildSharedPairStage(s: SparkSession, d: String,
-                           fresh: Boolean = false): Unit = {
-    if (fresh) pairCache.evict(s, d)
-    lshVerifiedPairs(s, d); ()
-  }
-
-  private[queries] def lshVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    pairCache.getOrBuild(s, d) {
+    * when their session's SparkContext stops, so a long-lived driver
+    * cycling sessions does not accumulate dead pins. */
+  private[graft] val lshVerifiedPairs =
+    new SharedStage[DataFrame]("dedup_lsh_shared_stage")({ (s, d) =>
       val toks = TextOps.tokens(col("text"))
       val sh = array_distinct(Dedup.shingles3(toks))
       val sig = Dedup.minhashFromBase(col("bh"), K)
@@ -117,7 +106,7 @@ object DedupQ {
           (inter.cast("double") / (col("sza") + col("szb") - inter))
             .as("jaccard"))
         .localCheckpoint(true)
-    }
+    })
 
   /** The same stage as DuckDB CTEs (no WITH prefix so callers can prepend
     * WITH or WITH RECURSIVE). Ends in `verified(id_a, id_b, jaccard)`. */

@@ -15,8 +15,8 @@ object Etl {
 
   // partitioned_dpp_join_prune's Hive-partitioned fixture, built ONCE
   // per (JVM, data dir) — the fact rewrite is GBs at sf1 and must not be
-  // billed to every timed run / registry-wide spec (the Events.slicedDirs
-  // precedent). The content is a pure function of the data dir, so the
+  // billed to every timed run / registry-wide spec (the
+  // Events.slicedFixtures precedent). The content is a pure function of the data dir, so the
   // cache keys on the dir alone: every session in this JVM shares the
   // build (computeIfAbsent serializes racing builders) and NO session
   // reference is retained — a stopped session costs nothing. Paths embed

@@ -7,7 +7,7 @@ import graft.QuerySpec
 import graft.io.Tables
 import graft.ops.AsOfJoin
 import graft.streaming.Streams
-import graft.util.Scratch
+import graft.util.{Scratch, SharedStage}
 
 /** Event-time operator pack (SURVEY.md §2.10): tumbling / sliding / session
   * windows and an as-of enrichment join, expressed as batch plans with
@@ -85,12 +85,17 @@ object Events {
     * boundaries — no global single-partition sort — which is the same
     * replay shape a cluster run uses on a 100 TB table.
     *
-    * Maps (session, sf-dir, slices) → (dir, number of NON-EMPTY slice
-    * files written; empty range partitions produce no part file). The
-    * multi-batch gate ([[batchGate]]) is provable only when the fixture
-    * filled every slice. */
-  private val slicedDirs = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (String, Int)]()
+    * One stage value holds both fixtures: slices → (dir, number of
+    * NON-EMPTY slice files written; empty range partitions produce no
+    * part file). Every stream query reads the 3-slice fixture,
+    * `events_stream_restart_recovery` the 4-slice one. The multi-batch
+    * gate ([[batchGate]]) is provable only when the fixture filled every
+    * slice. */
+  private[graft] val slicedFixtures =
+    new SharedStage[Map[Int, (String, Int)]]("events_sliced_fixture")({
+      (s, d) => Seq(3, 4).map(n => n -> writeSliced(s, d, n)).toMap
+    })
+
   /** Monotonic build id, part of the dir name: every (re)build lands in a
     * FRESH directory, so a `fresh=true` rebuild (or a second session in
     * the same JVM) can never rewrite OR delete slice files under a
@@ -106,37 +111,36 @@ object Events {
     * instance) across all ~17 consumers without proving anything a
     * third batch doesn't. `events_stream_restart_recovery` alone passes
     * slices=4 — its contract is 2 pre-stop + >= 2 post-restart batches. */
-  private def slicedFixture(s: SparkSession, d: String,
-                            slices: Int): (String, Int) =
-    slicedDirs.computeIfAbsent((s, d, slices), _ => {
-      val out = new java.io.File(Scratch.sessionDir(s,
-        slicedFixtureTag(slices, sliceBuildId.incrementAndGet()), d))
-      val stage = new java.io.File(out, ".stage") // dot-prefix: invisible
-      Tables.events(s, d)                         // to the file source
-        .repartitionByRange(slices, col("ts"), col("event_id"))
-        .sortWithinPartitions("ts", "event_id")
-        .write.mode("overwrite").parquet(stage.getPath)
-      // part-file names sort in range order; publish them as slice-NNN
-      // with 1s-spaced mtimes so oldest-first processing is unambiguous
-      // on any filesystem timestamp resolution.
-      val parts = Option(stage.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis()
-      val conf = s.sessionState.newHadoopConf()
-      val nonEmpty = parts.zipWithIndex.count { case (p, i) =>
-        val dst = new java.io.File(out, f"slice-$i%03d.parquet")
-        java.nio.file.Files.move(p.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(t0 + i * 1000L)
-        // an empty table still writes one (row-less) part file: count
-        // rows from the parquet footer here, without a Spark job
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(dst.toURI), conf))
-        try r.getRecordCount > 0 finally r.close()
-      }
-      (out.getPath, nonEmpty)
-    })
+  private def writeSliced(s: SparkSession, d: String,
+                          slices: Int): (String, Int) = {
+    val out = new java.io.File(Scratch.sessionDir(s,
+      slicedFixtureTag(slices, sliceBuildId.incrementAndGet()), d))
+    val stage = new java.io.File(out, ".stage") // dot-prefix: invisible
+    Tables.events(s, d)                         // to the file source
+      .repartitionByRange(slices, col("ts"), col("event_id"))
+      .sortWithinPartitions("ts", "event_id")
+      .write.mode("overwrite").parquet(stage.getPath)
+    // part-file names sort in range order; publish them as slice-NNN
+    // with 1s-spaced mtimes so oldest-first processing is unambiguous
+    // on any filesystem timestamp resolution.
+    val parts = Option(stage.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val t0 = System.currentTimeMillis()
+    val conf = s.sessionState.newHadoopConf()
+    val nonEmpty = parts.zipWithIndex.count { case (p, i) =>
+      val dst = new java.io.File(out, f"slice-$i%03d.parquet")
+      java.nio.file.Files.move(p.toPath, dst.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      dst.setLastModified(t0 + i * 1000L)
+      // an empty table still writes one (row-less) part file: count
+      // rows from the parquet footer here, without a Spark job
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(dst.toURI), conf))
+      try r.getRecordCount > 0 finally r.close()
+    }
+    (out.getPath, nonEmpty)
+  }
 
   /** The [[Scratch.sessionDir]] tag of a fixture build. */
   private[graft] def slicedFixtureTag(slices: Int, build: Long): String =
@@ -145,7 +149,7 @@ object Events {
   /** Non-empty slices the `slices`-slice fixture of `d` recorded. */
   private[graft] def recordedSlices(s: SparkSession, d: String,
                              slices: Int = 3): Int =
-    slicedFixture(s, d, slices)._2
+    slicedFixtures(s, d)(slices)._2
 
   /** The sliced replay source: the `glob`-selected slice files of the
     * `slices`-slice fixture, one file per micro-batch. */
@@ -156,17 +160,12 @@ object Events {
       .schema(Tables.events(s, d).schema)
       .option("pathGlobFilter", glob)
       .option("maxFilesPerTrigger", "1")
-      .parquet(slicedFixture(s, d, slices)._1)
+      .parquet(slicedFixtures(s, d)(slices)._1)
 
-  /** Benchmark hook: build both sliced replay fixtures (the 3-slice dir
-    * every stream query reads and restart-recovery's 4-slice dir) NOW so
-    * the build lands in its own timing entry instead of whichever stream
-    * query runs first — the same fairness contract as the other shared
-    * stages. */
+  /** [[slicedFixtures]] built now (`fresh`: rebuilt). */
   def buildSlicedFixtures(s: SparkSession,
                           d: String, fresh: Boolean = false): Unit = {
-    if (fresh) slicedDirs.keySet.removeIf(k => (k._1 eq s) && k._2 == d)
-    slicedFixture(s, d, 3); slicedFixture(s, d, 4); ()
+    if (fresh) slicedFixtures.rebuild(s, d) else slicedFixtures(s, d); ()
   }
 
   /** Micro-batches of `q` that read at least one row. */

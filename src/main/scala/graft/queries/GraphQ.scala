@@ -60,13 +60,9 @@ object GraphQ {
     * DISTINCT edge set, so every other consumer is unchanged. Footprint
     * is the narrow (src, dst, support) table; entries evict when their
     * session stops. */
-  private val edgeCache =
-    new graft.util.SessionScopedCache[org.apache.spark.sql.DataFrame]()
-
-  private[queries] def coPurchaseSupportEdges(
-      s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    edgeCache.getOrBuild(s, d) {
+  private[graft] val coPurchaseSupportEdges =
+    new graft.util.SharedStage[org.apache.spark.sql.DataFrame](
+        "graph_edges_shared_stage")({ (s, d) =>
       // DISTINCT the (order, part) basket table BEFORE the self-join:
       // support = distinct co-occurring orders, so over unique basket
       // rows it is a plain count(*) — one partial-aggregated shuffle of
@@ -84,18 +80,17 @@ object GraphQ {
         .groupBy(col("a.pk").as("src"), col("b.pk").as("dst"))
         .agg(count(lit(1)).as("support"))
         .localCheckpoint(true)
-    }
+    })
 
   private[queries] def coPurchaseEdges(s: org.apache.spark.sql.SparkSession,
                                        d: String): org.apache.spark.sql.DataFrame =
     coPurchaseSupportEdges(s, d).select(col("src"), col("dst"))
 
-  /** Benchmark hook: build the shared edge list NOW so it lands in its
-    * own timing entry instead of whichever graph consumer runs first. */
+  /** [[coPurchaseSupportEdges]] built now (`fresh`: rebuilt). */
   def buildSharedEdgeStage(s: org.apache.spark.sql.SparkSession,
                            d: String, fresh: Boolean = false): Unit = {
-    if (fresh) edgeCache.evict(s, d)
-    coPurchaseEdges(s, d); ()
+    if (fresh) coPurchaseSupportEdges.rebuild(s, d)
+    else coPurchaseSupportEdges(s, d); ()
   }
 
   /** One PageRank round: ranks(node, pr) → next ranks(node, pr).
@@ -1106,20 +1101,17 @@ object GraphQ {
   /** One LPA label build per (session, sf-dir) — the label vector is
     * consumed by BOTH graph_label_propagation and the modularity audit,
     * so like the edge list it is built once and shared (the bench
-    * charges it to its own `graph_lpa_shared_labels` entry). */
-  private val lpaCache = new graft.util.SessionScopedCache[
-    (org.apache.spark.sql.DataFrame, Long)]()
-
-  /** Run `rounds` synchronous LPA rounds over the AFFINITY BACKBONE
+    * charges it to its own `graph_lpa_shared_labels` entry).
+    *
+    * Three synchronous LPA rounds over the AFFINITY BACKBONE
     * (support >= 2 — see [[affinityBackbone]]; r11 change, oracles
     * moved in lockstep); returns (final labels, #nodes whose label
     * changed in the last round) — shared by graph_label_propagation
     * and the modularity audit so the community definition cannot
     * drift between them. */
-  private[graft] def lpaLabels(s: org.apache.spark.sql.SparkSession,
-                               d: String)
-      : (org.apache.spark.sql.DataFrame, Long) =
-    lpaCache.getOrBuild(s, d) {
+  private[graft] val lpaLabels =
+    new graft.util.SharedStage[(org.apache.spark.sql.DataFrame, Long)](
+        "graph_lpa_shared_labels")({ (s, d) =>
       val edges = affinityBackbone(s, d)
       val rounds = Rounds.iterate(
           edges.select(col("src").as("node")).distinct()
@@ -1129,16 +1121,7 @@ object GraphQ {
       }
       val Seq(prev, labels) = rounds.takeRight(2).map(_._1)
       (labels, Rounds.changedRows(prev, labels, "node", "label"))
-    }
-
-  /** Benchmark hook: run the shared LPA rounds NOW so the label build
-    * lands in its own timing entry instead of whichever of the two
-    * community consumers runs first. */
-  def buildSharedLpaStage(s: org.apache.spark.sql.SparkSession,
-                          d: String, fresh: Boolean = false): Unit = {
-    if (fresh) lpaCache.evict(s, d)
-    lpaLabels(s, d); ()
-  }
+    })
 
   /** DuckDB CTE chain mirroring [[lpaLabels]]: li + the support-≥2
     * AFFINITY BACKBONE as `e0` (so the modularity/conductance oracles'

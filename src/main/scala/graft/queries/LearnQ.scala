@@ -111,13 +111,9 @@ object LearnQ {
     * table, the 5-round-trained weight vector, and n — shared by the
     * trainer query and the calibration audit (same pattern as DedupQ's
     * verified-pair stage; the bench charges it to its own entry). */
-  private val logregCache = new graft.util.SessionScopedCache[
-    (org.apache.spark.sql.DataFrame, Array[Double], Double)]()
-
-  private[queries] def trainedLogreg(s: org.apache.spark.sql.SparkSession,
-                                     d: String)
-      : (org.apache.spark.sql.DataFrame, Array[Double], Double) =
-    logregCache.getOrBuild(s, d) {
+  private[graft] val trainedLogreg = new graft.util.SharedStage[
+    (org.apache.spark.sql.DataFrame, Array[Double], Double)](
+      "learn_logreg_shared_train")({ (s, d) =>
       val toks = TextOps.tokens(col("text"))
       val nt = size(toks).cast("double")
       val (ft, rows) = graft.ops.Rounds.land(Tables.documents(s, d)
@@ -141,15 +137,7 @@ object LearnQ {
         w = Array.tabulate(4)(i => w(i) - LogregLr * g(i))
       }
       (ft, w, n)
-    }
-
-  /** Benchmark hook: train NOW so the cost lands in its own timing entry
-    * instead of whichever logreg consumer runs first. */
-  def buildSharedLogregStage(s: org.apache.spark.sql.SparkSession,
-                             d: String, fresh: Boolean = false): Unit = {
-    if (fresh) logregCache.evict(s, d)
-    trainedLogreg(s, d); ()
-  }
+    })
 
   /** Oracle-side feature-table + count CTEs — the shared front of every
     * learner oracle that trains on the cached feature table. */

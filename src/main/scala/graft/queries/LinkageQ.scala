@@ -77,21 +77,10 @@ object LinkageQ {
   // plan is the same: equi-joins on block keys, never a cross join.
   // ---------------------------------------------------------------------
 
-  private val linkCache =
-    new graft.util.SessionScopedCache[(DataFrame, DataFrame, DataFrame)]()
-
-  /** Benchmark hook: build the shared sources + candidate-pair stage now so
-    * it lands in its own timing entry (see Bench shared-stage medians). */
-  def buildSharedLinkageStage(s: SparkSession, d: String,
-                              fresh: Boolean = false): Unit = {
-    if (fresh) linkCache.evict(s, d)
-    linkageStage(s, d); ()
-  }
-
   /** (srcA, srcB, candidatePairs) — all narrow, localCheckpointed. */
-  private[queries] def linkageStage(
-      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
-    linkCache.getOrBuild(s, d) {
+  private[graft] val linkageStage =
+    new graft.util.SharedStage[(DataFrame, DataFrame, DataFrame)](
+        "linkage_candidates_shared_stage")({ (s, d) =>
       val c = Tables.customer(s, d)
       val srcA = c.select(
         col("c_custkey").as("a_id"),
@@ -148,7 +137,7 @@ object LinkageQ {
           p
         }
       (srcA, srcB, cand)
-    }
+    })
 
   /** Shared linkage CTE prefix for the DuckDB oracles (lockstep with
     * [[linkageStage]]). */

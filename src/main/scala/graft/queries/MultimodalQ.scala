@@ -18,12 +18,9 @@ object MultimodalQ {
   /** One PNG encode per (session, sf-dir): the ingest artifact both
     * decode-side queries read. localCheckpointed so the ImageIO encode
     * cost is paid once, like any persisted binary corpus. */
-  private val pngCache =
-    new graft.util.SessionScopedCache[org.apache.spark.sql.DataFrame]()
-
-  private def pngAssets(s: org.apache.spark.sql.SparkSession,
-                        d: String): org.apache.spark.sql.DataFrame =
-    pngCache.getOrBuild(s, d) {
+  private[graft] val pngAssets =
+    new graft.util.SharedStage[org.apache.spark.sql.DataFrame](
+        "multimodal_png_shared_encode")({ (s, d) =>
       // NOTE (r16 audit): Tables.documents already conditionally fans
       // out single-split scans (Scale.fanOut), so the ImageIO encode
       // runs at session parallelism — do NOT wrap another fanOut here
@@ -32,39 +29,21 @@ object MultimodalQ {
       // see the precondition on Scale.fanOut).
       Multimodal.pngAssetTable(Tables.documents(s, d))
         .toDF().localCheckpoint(true)
-    }
-
-  /** Benchmark hook: encode the PNG corpus NOW so the cost lands in its
-    * own timing entry instead of whichever decode query runs first. */
-  def buildSharedPngStage(s: org.apache.spark.sql.SparkSession,
-                          d: String, fresh: Boolean = false): Unit = {
-    if (fresh) pngCache.evict(s, d)
-    pngAssets(s, d); ()
-  }
+    })
 
   /** One WAV encode per (session, sf-dir), same ingest-artifact
     * treatment as the PNGs: AudioSystem.write pays SPI + container
     * assembly per clip, so the encoded corpus is localCheckpointed once
     * and the query measures what it claims to — the real decode +
     * feature pass. */
-  private val wavCache =
-    new graft.util.SessionScopedCache[org.apache.spark.sql.DataFrame]()
-
-  private def wavAssets(s: org.apache.spark.sql.SparkSession,
-                        d: String): org.apache.spark.sql.DataFrame =
-    wavCache.getOrBuild(s, d) {
+  private[graft] val wavAssets =
+    new graft.util.SharedStage[org.apache.spark.sql.DataFrame](
+        "multimodal_wav_shared_encode")({ (s, d) =>
       // NOTE (r16 audit): Tables.documents already fans out — see
       // pngAssets above.
       Multimodal.wavAssetTable(Tables.documents(s, d))
         .toDF().localCheckpoint(true)
-    }
-
-  /** Benchmark hook: encode the WAV corpus NOW (own timing entry). */
-  def buildSharedWavStage(s: org.apache.spark.sql.SparkSession,
-                          d: String, fresh: Boolean = false): Unit = {
-    if (fresh) wavCache.evict(s, d)
-    wavAssets(s, d); ()
-  }
+    })
 
   /** Decoded raster table: real ImageIO decode of the cached PNG bytes. */
   private def decodedPngs(s: org.apache.spark.sql.SparkSession,

@@ -13,25 +13,14 @@ object SimilarityQ {
   /** One k=8, rounds=2 codebook train per (session, sf-dir) — the trained
     * quantizer is the persisted artifact every IVF consumer (search,
     * nprobe, IVF-PQ, cluster profile) reuses, exactly like DedupQ's
-    * shared verified-pair stage. The cached table is 8 rows
+    * shared verified-pair stage. The stage holds 8 rows
     * (localCheckpointed by kmeansCentroids), so the footprint is the
     * codebook, not the corpus; entries evict when their session stops. */
-  private val centsCache =
-    new graft.util.SessionScopedCache[org.apache.spark.sql.DataFrame]()
-
-  private def trainedCents8x2(s: org.apache.spark.sql.SparkSession,
-                              d: String): org.apache.spark.sql.DataFrame =
-    centsCache.getOrBuild(s, d) {
+  private[graft] val trainedCents8x2 =
+    new graft.util.SharedStage[org.apache.spark.sql.DataFrame](
+        "similarity_kmeans_shared_train")({ (s, d) =>
       Similarity.kmeansCentroids(Tables.embeddings(s, d), 8, 2)
-    }
-
-  /** Benchmark hook: train the shared codebook NOW so it lands in its own
-    * timing entry instead of whichever IVF consumer runs first. */
-  def buildSharedTrainStage(s: org.apache.spark.sql.SparkSession,
-                            d: String, fresh: Boolean = false): Unit = {
-    if (fresh) centsCache.evict(s, d)
-    trainedCents8x2(s, d); ()
-  }
+    })
 
   /** DuckDB: exact double dot product of lists a·b (1-based indexing). */
   private def duckDot(a: String, b: String) =

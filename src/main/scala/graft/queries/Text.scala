@@ -99,22 +99,18 @@ object Text {
     * BPE consumers (merge table, fertility) reuse, like DedupQ's pair
     * stage and SimilarityQ's codebook. The cached DataFrame is the
     * localCheckpointed distinct-word table (tiny); rules are plain
-    * driver values. Entries evict when their session stops. */
-  private val bpeCache = new graft.util.SessionScopedCache[
-    (Seq[(Long, Option[String], Option[Long], Option[Long])],
-      org.apache.spark.sql.DataFrame)]()
-
-  /** 5-round BPE merge training over the distinct-word table; returns
+    * driver values. Entries evict when their session stops.
+    *
+    * 5-round BPE merge training over the distinct-word table; returns
     * (rules as (round, merged, freq, n_symbols_after), final encodings
     * (w, c, enc)). See text_bpe_merges for the full contract. Rule
     * fields are Options: a corpus too small to offer any pair (empty or
     * single-char vocabulary) yields NULL rule rows — the same NULLs the
     * oracle's scalar subqueries produce — rather than a head()-of-empty
     * crash. */
-  private def trainedBpe(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Seq[(Long, Option[String], Option[Long], Option[Long])],
-        org.apache.spark.sql.DataFrame) =
-    bpeCache.getOrBuild(s, d) {
+  private[graft] val trainedBpe = new graft.util.SharedStage[
+    (Seq[(Long, Option[String], Option[Long], Option[Long])],
+      org.apache.spark.sql.DataFrame)]("text_bpe_shared_train")({ (s, d) =>
       val words = Tables.documents(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
@@ -162,14 +158,18 @@ object Text {
         }
       }
       (rules, enc)
-    }
+    })
 
-  /** Benchmark hook: train the shared BPE stage NOW so it lands in its
-    * own timing entry instead of whichever BPE consumer runs first. */
-  def buildSharedBpeStage(s: org.apache.spark.sql.SparkSession,
-                          d: String, fresh: Boolean = false): Unit = {
-    if (fresh) bpeCache.evict(s, d)
-    trainedBpe(s, d); ()
+  /** Adjacent-token bigram pairs of `text` as array<struct<a,b>> — the
+    * ONE definition shared by the census build and the per-doc
+    * plausibility scan, so the corpus statistics and the scored pairs
+    * cannot silently diverge. */
+  private def bigramPairs: org.apache.spark.sql.Column = {
+    val toks = TextOps.tokens(col("text"))
+    when(size(toks) >= 2,
+      transform(sequence(lit(0), size(toks) - 2),
+        i => struct(get(toks, i).as("a"), get(toks, i + 1).as("b"))))
+      .otherwise(array().cast("array<struct<a:string,b:string>>"))
   }
 
   /** One corpus n-gram census per (session, sf-dir) — the count tables
@@ -188,24 +188,9 @@ object Text {
     * aggs); at 100 TB this is exactly the n-gram statistics table a
     * corpus pipeline materializes once per snapshot and joins
     * everywhere else. */
-  private val ngramCache = new graft.util.SessionScopedCache[
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
-  /** Adjacent-token bigram pairs of `text` as array<struct<a,b>> — the
-    * ONE definition shared by the census build and the per-doc
-    * plausibility scan, so the corpus statistics and the scored pairs
-    * cannot silently diverge. */
-  private def bigramPairs: org.apache.spark.sql.Column = {
-    val toks = TextOps.tokens(col("text"))
-    when(size(toks) >= 2,
-      transform(sequence(lit(0), size(toks) - 2),
-        i => struct(get(toks, i).as("a"), get(toks, i + 1).as("b"))))
-      .otherwise(array().cast("array<struct<a:string,b:string>>"))
-  }
-
-  private def ngramCensus(s: org.apache.spark.sql.SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    ngramCache.getOrBuild(s, d) {
+  private[graft] val ngramCensus = new graft.util.SharedStage[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+      "text_ngram_shared_census")({ (s, d) =>
       val pairs = bigramPairs
       val bi = Tables.documents(s, d)
         .select((col("doc_id") % 5 === 0).as("insub"), explode(pairs).as("p"))
@@ -218,15 +203,7 @@ object Text {
         .groupBy("tok").agg(count(lit(1)).as("r"))
         .localCheckpoint(true)
       (bi, uni)
-    }
-
-  /** Benchmark hook: build the shared n-gram census NOW so it lands in
-    * its own timing entry instead of whichever consumer runs first. */
-  def buildSharedNgramStage(s: org.apache.spark.sql.SparkSession,
-                            d: String, fresh: Boolean = false): Unit = {
-    if (fresh) ngramCache.evict(s, d)
-    ngramCensus(s, d); ()
-  }
+    })
 
   /** The BPE training replay as DuckDB CTEs (no WITH prefix): w0/e0/n0 +
     * per-round p$i (pair counts), t$i (argmax), e$i (rewritten

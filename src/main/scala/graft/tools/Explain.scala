@@ -1,14 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans for selected queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session("graft-explain")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else graft.SparkEntry.registry.keys.toSeq.sorted

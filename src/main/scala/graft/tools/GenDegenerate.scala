@@ -39,14 +39,7 @@ object GenDegenerate {
     val Array(base, out, mode) = args
     require(mode == "empty" || mode == "one",
       s"[gendegenerate] mode must be empty|one, got: $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-gendegenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-gendegenerate")
     try generate(spark, base, out, mode) finally spark.stop()
   }
 

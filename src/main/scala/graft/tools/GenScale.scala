@@ -65,14 +65,7 @@ object GenScale {
     require(hot == 0 || skew,
       "[genscale] --hot=<permille> requires --skew")
     val tiles = positional.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-genscale")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-genscale")
     try generate(spark, base, out, tiles, skew, hot)
     finally spark.stop()
   }

@@ -5,11 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** (SparkSession, sf-dir)-keyed memo for expensive shared build stages —
-  * the LSH verified-pair table, trained k-means codebook, co-purchase
-  * edge list, BPE merge table. Consumers each call `getOrBuild`; the
-  * first one pays the build, the rest reuse the materialized artifact
-  * (exactly what a production pipeline persists once).
+/** (SparkSession, sf-dir)-keyed memo: the cache of every [[SharedStage]]
+  * and of per-session facts such as `io.Tables`' timestamp encoding. The
+  * first `getOrBuild` pays the build, the rest reuse the artifact.
   *
   * Entries are evicted when the owning session's application ends (one
   * listener per session, registered lazily on first build), so a test
@@ -34,12 +32,11 @@ final class SessionScopedCache[V] {
       build
     })
 
-  /** Drop the (session, dir) entry so the next getOrBuild rebuilds —
-    * the bench uses this to sample a shared stage's build time more than
-    * once (median) instead of trusting one possibly-contended run.
-    * Cached DataFrames (alone or inside tuples) get a best-effort
-    * unpersist; localCheckpoint blocks of a dropped artifact are
-    * reclaimed by the ContextCleaner once unreferenced. */
+  /** Drop the (session, dir) entry so the next getOrBuild rebuilds
+    * ([[SharedStage.rebuild]], executor-loss recovery). Cached
+    * DataFrames (alone or inside tuples) get a best-effort unpersist;
+    * localCheckpoint blocks of a dropped artifact are reclaimed by the
+    * ContextCleaner once unreferenced. */
   def evict(s: SparkSession, dir: String): Unit =
     Option(cache.remove((s, dir))).foreach(release)
 

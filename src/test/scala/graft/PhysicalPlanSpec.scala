@@ -1061,8 +1061,8 @@ class PhysicalPlanSpec extends SparkSpec {
     // consumer's physical plan reads ONLY staged RDDs — any FileScan
     // would mean the query re-ran the order-key self-join or the
     // backbone filter from parquet.
-    graft.queries.GraphQ.buildSharedEdgeStage(spark, sf)
-    graft.queries.GraphQ.buildSharedLpaStage(spark, sf)
+    graft.queries.GraphQ.coPurchaseSupportEdges(spark, sf)
+    graft.queries.GraphQ.lpaLabels(spark, sf)
     for (q <- Seq("graph_label_propagation", "graph_lpa_modularity",
         "graph_community_conductance")) {
       val p = plan(SparkEntry.registry(q).fn(spark, sf))

@@ -30,7 +30,7 @@ class PhonePropertySpec extends SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(inputs.map(Row(_)), 4), schema)
     // never throws:
-    val out = df.select(col("p"), Phone.normalize(col("p")).as("n")).collect()
+    val out = Phone.normalized(df, "p", "n").collect()
     out.foreach { r =>
       Option(r.getString(1)).foreach { s =>
         assert(s.startsWith("+1 ") || s.startsWith("+33 "),
