@@ -95,3 +95,43 @@ PY
   echo "preflight OK: Verify subset run writes its marker and oracle SQL"
   rm -rf "$out"
 fi
+
+# --e1: the RunPipeline CLI end to end on the benchmark's E1 inputs (seed
+# 7, 5x10^4 contacts), generated by importing layerbench/gen.py read-only
+# (no bytecode is written under layerbench/). Asserts every sink's row
+# count, which the generator's construction fixes, and that each sink's
+# key is unique; prints a sha256 over each sink's sorted rows, so two
+# commits' outputs can be compared (~2 min).
+if [[ "${1:-}" == "--e1" ]]; then
+  out=$(mktemp -d /tmp/preflight_e1.XXXX)
+  PYTHONDONTWRITEBYTECODE=1 python3 - "$out/in" <<'PY'
+import sys
+sys.path.insert(0, "layerbench")
+import gen
+gen.e1_sources(sys.argv[1], 7, 50_000, 50_000, 5_000)
+PY
+  sbt -batch "runMain graft.etl.RunPipeline $out/in/contacts.csv \
+    $out/in/contrats.csv $out/in/relations.xlsx $out/sinks" < /dev/null \
+    > "$out/pipeline.log" 2>&1 \
+    || { tail -20 "$out/pipeline.log" >&2; exit 1; }
+  python3 - "$out/sinks" <<'PY'
+import hashlib, sys
+import pyarrow.parquet as pq
+want = {"entities": (51251, ["entity_id"]),
+        "contacts": (45000, ["entity_id"]),
+        "contracts": (50000, ["contract_number"]),
+        "relations": (4500, ["entity_id_source", "entity_id_destination"])}
+for sink, (rows, key) in want.items():
+    t = pq.read_table(f"{sys.argv[1]}/{sink}")
+    assert t.num_rows == rows, f"{sink}: {t.num_rows} rows, want {rows}"
+    keys = set(zip(*(t.column(k).to_pylist() for k in key)))
+    assert len(keys) == rows, f"{sink}: {rows - len(keys)} duplicate keys"
+    cols = sorted(t.column_names)
+    lines = sorted(repr(r) for r in zip(*(t.column(c).to_pylist() for c in cols)))
+    digest = hashlib.sha256("\n".join([repr(cols)] + lines).encode())
+    print(f"{sink}: {rows} rows, key {'+'.join(key)} unique, "
+          f"sha256 {digest.hexdigest()}")
+PY
+  echo "preflight OK: RunPipeline sinks hold the expected rows and keys"
+  rm -rf "$out"
+fi

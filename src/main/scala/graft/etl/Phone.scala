@@ -1,14 +1,15 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import graft.expressions.PhoneIntl
 
 /** Phone-number normalization to international format.
   *
   * Re-expresses the reference's `parse_phone_number`
-  * (`/root/reference/insert.py:28-67`) as a pure `Column` expression chain:
-  * no UDF, so the whole transform stays inside whole-stage codegen and is
-  * expressible in the DuckDB oracle. Branch-for-branch semantics:
+  * (`insert.py:28-67`) as one native expression,
+  * [[graft.expressions.PhoneIntl]]: a single code-point pass per row
+  * inside whole-stage codegen. Branch-for-branch semantics:
   *
   *  1. stringify; `'.'→'-'`, `')'→'-'`, drop `'('`        (insert.py:34-35)
   *  2. split on `'x'`: base = part 0, extension = part 1  (insert.py:37-38)
@@ -26,8 +27,11 @@ import org.apache.spark.sql.functions._
   *     public data), with the ITU E.164 length envelope (4 ≤ NSN and
   *     CC+NSN ≤ 15 digits) as the fallback for unlisted codes. For the
   *     two regions [[normalized]] can emit this reduces to NSN 10 (+1)
-  *     / NSN 9 (+33) — identical to the previous hardcoded rule, so
-  *     normalization hashes are unchanged. Impossible or empty → NULL.
+  *     / NSN 9 (+33). Impossible or empty → NULL.
+  *
+  * Lengths and positions count code points, as Spark's `length` and
+  * `substring` do. The DuckDB oracle of `phone_normalize` replicates the
+  * same steps in SQL.
   *
   * Known divergences (documented, covered by unit tests):
   *  - null input → NULL (the reference stringifies NaN to "nan", which then
@@ -35,128 +39,18 @@ import org.apache.spark.sql.functions._
   *  - pathological non-digit extensions (e.g. "x8-9") pass our digit-count
   *    validation but may fail libphonenumber's extension grammar.
   *
-  * Scale: pure expression → codegen'd, partition-local, zero shuffle.
+  * Scale: one partition-local projection, zero shuffle.
   */
 object Phone {
 
-  /** Possible NSN (national significant number) lengths per calling
-    * code — the general-description possible-lengths sets from
-    * libphonenumber's published PhoneNumberMetadata (public data),
-    * covering the majority-traffic calling codes. Variable-length plans
-    * (DE, IT, CN…) carry their full published ranges. */
-  private val NsnLengths: Seq[(String, Seq[Int])] = Seq(
-    "1"  -> Seq(10),           // NANP (US/CA/…): fixed 10
-    "7"  -> Seq(10),           // RU/KZ
-    "20" -> Seq(8, 9, 10),     // EG
-    "33" -> Seq(9),            // FR
-    "34" -> Seq(9),            // ES
-    "39" -> (6 to 11),         // IT: variable-length plan
-    "44" -> Seq(7, 9, 10),     // UK
-    "49" -> (6 to 11),         // DE: variable-length plan
-    "55" -> Seq(10, 11),       // BR
-    "61" -> Seq(5, 8, 9, 10),  // AU
-    "81" -> Seq(8, 9, 10),     // JP
-    "82" -> (8 to 11),         // KR
-    "86" -> (5 to 12),         // CN
-    "91" -> Seq(7, 8, 9, 10))  // IN
-
-  /** Digit count via the `translate` char-map (no regex — regex engines
-    * in the validity hot path measured a 6× query slowdown). */
-  private def digitCount(c: Column): Column =
-    length(c) - length(translate(c, "0123456789", ""))
-
-  /** The lengths table as ONE map-literal column of bitmasks (bit L set
-    * ⇔ NSN length L possible). A single `element_at` lookup keeps the
-    * validity expression tree small: the Column DSL has no let-binding,
-    * so a 15-branch when-chain would re-inline the entire upstream
-    * expression per branch (measured: an 8.8 MiB serialized task binary
-    * and a 6× phone_normalize slowdown from codegen alone). */
-  private val NsnLengthMask: Column =
-    map(NsnLengths.flatMap { case (c, lens) =>
-      Seq(lit(c), lit(lens.map(l => 1L << l).sum))
-    }: _*)
-
   /** libphonenumber-style `is_possible_number` over an international
-    * string `"+CC nsn…[xext]"`: NSN digit count must be in the calling
-    * code's possible-lengths set; unlisted codes fall back to the ITU
-    * E.164 envelope (NSN ≥ 4 and CC+NSN ≤ 15 digits). Pure `Column`
-    * expression — codegen'd, no UDF, regex-free (substring_index,
-    * char-map translate, one map lookup, one bit test). Non-international
-    * strings (no `"+CC "` prefix) are not possible numbers. */
-  def isPossibleNumber(intl: Column): Column = {
-    val beforeExt = substring_index(intl, "x", 1)
-    // calling code = the first space-delimited token minus its '+':
-    // 1-3 digits, and something must follow the token
-    val firstTok = substring_index(beforeExt, " ", 1)
-    val cc = substring(firstTok, 2, 3)
-    val ccOk = firstTok.startsWith("+") &&
-      length(firstTok).between(2, 4) &&
-      digitCount(cc) === length(cc) &&
-      length(beforeExt) > length(firstTok)
-    // NSN digits = all digits after the calling-code token (the cc
-    // digits are the only digits inside it)
-    val nsn = digitCount(beforeExt) - length(cc)
-    val mask = element_at(NsnLengthMask, cc)
-    // bit test without variable-shift builtins: floor(mask / 2^nsn) is
-    // exact in double for mask < 2^16, nsn ≥ 0
-    val lenOk = when(mask.isNotNull,
-      floor(mask.cast("double") /
-        pow(lit(2.0), greatest(nsn, lit(0)).cast("double")))
-        .cast("long") % 2 === 1 && nsn >= 0)
-      .otherwise(nsn >= 4 && nsn + length(cc) <= 15)
-    ccOk && lenOk
-  }
+    * string `"+CC nsn…[xext]"` (step 8). Non-international strings (no
+    * `"+CC "` prefix) are not possible numbers; NULL stays NULL. */
+  def isPossibleNumber(intl: Column): Column = PhoneIntl.phone_possible(intl)
 
   /** `df` with column `out` set to the international normalization of
     * column `in`, NULL for invalid numbers (`out` may equal `in`; an
-    * existing `out` keeps its position). Two projections: the
-    * [[candidate]] is bound to `out`, then gated in place with
-    * `when(isPossibleNumber(out), out)`, so the validity sub-checks read
-    * the bound attribute instead of re-inlining the candidate tree
-    * (CollapseProject never re-inlines a non-cheap, multiply-referenced
-    * alias). Measured at sf0.1: 1.18 s → ~0.5 s on phone_normalize. */
+    * existing `out` keeps its position). */
   def normalized(df: DataFrame, in: String, out: String): DataFrame =
-    df.withColumn(out, candidate(col(in)))
-      .withColumn(out, when(isPossibleNumber(col(out)), col(out)))
-
-  /** The formatted international candidate — scaladoc steps 1-7, BEFORE
-    * the step-8 validity gate; [[normalized]] binds and gates it. */
-  def candidate(phoneRaw: Column): Column = {
-    val cleaned  = translate(phoneRaw.cast("string"), ".)(", "--")
-    val extParts = split(cleaned, "x")
-    val base     = get(extParts, lit(0))
-    val hasExt   = size(extParts) > 1
-    val ext      = coalesce(get(extParts, lit(1)), lit(""))
-
-    val parts = split(base, "-")
-    val p = (i: Int) => get(parts, lit(i))
-
-    val us3  = concat(lit("+1 "), base)
-    val us4  = concat(lit("+1 "), p(1), lit("-"), p(2), lit("-"), p(3))
-    val us10 = concat(lit("+1 "),
-      substring(cleaned, 1, 3), lit("-"),
-      substring(cleaned, 4, 3), lit("-"),
-      substring(cleaned, 7, 4))
-    val fr9 = concat(lit("+33 "),
-      substring(cleaned, 1, 1), lit(" "),
-      substring(cleaned, 2, 2), lit(" "),
-      substring(cleaned, 4, 2), lit(" "),
-      substring(cleaned, 6, 2), lit(" "),
-      substring(cleaned, 8, 2))
-
-    // Later reference statements override earlier ones → highest-priority
-    // branch first here (the length-9/10 branches are mutually exclusive).
-    val intl =
-      when(length(cleaned) === 9, fr9)
-        .when(length(cleaned) === 10 && !cleaned.startsWith("0"), us10)
-        .when(size(parts) === 3, us3)
-        .when(size(parts) === 4 && (p(0) === "001" || p(0) === "+1"), us4)
-        .otherwise(lit(""))
-
-    // step 7; the general is_possible_number gate (step 8) is applied by
-    // [[normalized]] over this candidate. For the formats this chain
-    // emits it reduces to the previous hardcoded rule — "+1" with NSN 10
-    // or "+33" with NSN 9 — byte-identical outputs.
-    when(hasExt, concat(intl, lit("x"), ext)).otherwise(intl)
-  }
+    df.withColumn(out, PhoneIntl.phone_intl(col(in)))
 }

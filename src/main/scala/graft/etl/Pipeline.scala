@@ -13,14 +13,20 @@ import graft.ops.Rounds
   *
   * `run` is not lazy: like the reference, which conforms each source once
   * in memory before loading it (insert.py:93-129), it lands the conformed
-  * contacts and the conformed contracts with [[graft.ops.Rounds.land]],
-  * two eager jobs. Every [[Output]] frame is planned over those landed
-  * blocks, so each audit or sink reads them instead of re-reading the
-  * CSVs and re-running the conform chain (phone included) per consumer.
-  * The trade is the one `Rounds` makes: the landed blocks have no
-  * lineage, so an executor lost after `run` fails the later audit or
-  * sink, and the pipeline must be rerun from `run`. The blocks are freed
-  * by Spark's context cleaner once the `Output` is unreachable.
+  * contacts and the conformed contracts with [[graft.ops.Rounds.landAll]]:
+  * two eager jobs that run at the same time, each on its own thread with
+  * the caller's local properties, so the one-split contacts landing and
+  * the contracts landing share the cores instead of queueing. If either
+  * landing fails, `run` waits for the other to end and then rethrows the
+  * first failure (contacts before contracts); no `Output` is returned,
+  * and the landed blocks of the other source are left for the cleaner.
+  * Every [[Output]] frame is planned over those landed blocks, so each
+  * audit or sink reads them instead of re-reading the CSVs and re-running
+  * the conform (phone included) per consumer. The trade is the one
+  * `Rounds` makes: the landed blocks have no lineage, so an executor lost
+  * after `run` fails the later audit or sink, and the pipeline must be
+  * rerun from `run`. The blocks are freed by Spark's context cleaner once
+  * the `Output` is unreachable.
   *
   * Divergences from the reference, all deliberate (SURVEY.md §1, §2.4):
   *  - surrogate ids are deterministic sha2 over the natural key
@@ -32,13 +38,13 @@ import graft.ops.Rounds
   *  - phone validity is the NSN-length reduction of libphonenumber's
   *    `is_possible_number` (see [[Phone]]).
   *
-  * Plan shape at scale: two landing jobs (scan → partition-local
-  * conform/id columns); over the landed blocks, one union with the
-  * relation endpoints → one dedup shuffle for `entities`, one keep-first
-  * window shuffle for `contacts`, none for `contracts`. The landed blocks
-  * are executor block storage (memory, spilling to local disk). The
-  * reference's O(n²) row-by-row Python loops (insert.py:134-166) do not
-  * exist here.
+  * Plan shape at scale: two concurrent landing jobs (scan →
+  * partition-local conform/id columns); over the landed blocks, one
+  * union with the relation endpoints → one dedup shuffle for
+  * `entities`, one keep-first window shuffle for `contacts`, none for
+  * `contracts`. The landed blocks are executor block storage (memory,
+  * spilling to local disk). The reference's O(n²) row-by-row Python
+  * loops (insert.py:134-166) do not exist here.
   */
 object Pipeline {
 
@@ -56,15 +62,14 @@ object Pipeline {
 
     // Conform: positional rename (insert.py:102-107) + date parsing
     // (insert.py:110-115) + phone normalization (insert.py:118), each
-    // source landed once (see scaladoc).
-    val (contacts, _) = Rounds.land(Phone.normalized(
-        Conform.rename(contactsRaw, Conform.contactColumns)
-          .withColumn("birthday", Conform.parseDateFr(col("birthday"))),
-        "phone_number", "phone_number")
-      .withColumn("entity_id", Identity.surrogateId(
-        col("name"), col("first_name"), col("birthday"), col("entity_type"))))
-
-    val (contracts, _) = Rounds.land(
+    // source landed once, both at the same time (see scaladoc).
+    val Seq((contacts, _), (contracts, _)) = Rounds.landAll(
+      Phone.normalized(
+          Conform.rename(contactsRaw, Conform.contactColumns)
+            .withColumn("birthday", Conform.parseDateFr(col("birthday"))),
+          "phone_number", "phone_number")
+        .withColumn("entity_id", Identity.surrogateId(
+          col("name"), col("first_name"), col("birthday"), col("entity_type"))),
       Conform.rename(contractsRaw, Conform.contractColumns)
         .withColumn("birthday", Conform.parseDateFr(col("birthday")))
         .withColumn("open_at", Conform.parseDateFr(col("open_at")))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success, Try}
 
 /** Eager cuts: per-round state of an iteration unrolled in Scala (PageRank,
   * label propagation, k-core peeling, min-label components, Lloyd
@@ -21,7 +22,8 @@ import org.apache.spark.sql.functions._
   *
   * A fixed round count is a budget, not the semantics: where the
   * answer is a fixpoint, [[requireFixpoint]] turns a too-deep input
-  * into a loud failure instead of a silently truncated result. */
+  * into a loud failure instead of a silently truncated result.
+  * Independent frames land side by side with [[landAll]]. */
 object Rounds {
 
   /** Largest per-round state (rows) that rides a broadcast join; past
@@ -36,6 +38,25 @@ object Rounds {
     val obs = Observation()
     val cut = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
     (cut, obs.get("rows").asInstanceOf[Long])
+  }
+
+  /** Each of `dfs` landed as by [[land]], as concurrent jobs: one fresh
+    * thread per frame, so the jobs share the cores instead of queueing.
+    * A fresh thread inherits a copy of the caller's Spark local
+    * properties (job group, scheduler pool, any caller tag), so its job
+    * carries them. Every thread is joined before this returns, in `dfs`
+    * order, or rethrows the first failure in that order: a failing
+    * landing never leaves another one running behind the caller. */
+  def landAll(dfs: DataFrame*): Seq[(DataFrame, Long)] = {
+    val landed = new Array[Try[(DataFrame, Long)]](dfs.size)
+    val threads = dfs.zipWithIndex.map { case (df, i) =>
+      new Thread(() =>
+        landed(i) = try Success(land(df)) catch { case t: Throwable => Failure(t) },
+        s"rounds-land-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    landed.toSeq.map(_.get)
   }
 
   /** `init` and `n` rounds of `step`, each landed; `step` sees the

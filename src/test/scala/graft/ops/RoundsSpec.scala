@@ -1,6 +1,8 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -10,7 +12,8 @@ import graft.SparkSpec
 
 /** Rounds is pinned once, here: the landed count is the true count, the
   * landed plan is a bare checkpoint scan, the count rides the checkpoint's
-  * own job, and the guards read the right rounds. */
+  * own job, the guards read the right rounds, and landAll lands as land
+  * does, with the caller's local properties, and never returns early. */
 class RoundsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -56,6 +59,54 @@ class RoundsSpec extends SparkSpec {
     val landed = jobs { Rounds.land(grouped); () }
     val separate = jobs { grouped.localCheckpoint(true).count(); () }
     assert(landed < separate, s"land: $landed jobs, separate: $separate")
+  }
+
+  test("landAll lands each frame as sequential land does, in order") {
+    val frames = Seq(grouped, grouped.filter(col("k") === 7),
+      grouped.filter(col("k") < 0), spark.range(5).toDF())
+    val all = Rounds.landAll(frames: _*)
+    val one = frames.map(Rounds.land)
+    assert(all.map(_._2) == one.map(_._2))
+    assert(all.map(_._2) == Seq(1000L, 1L, 0L, 5L))
+    all.zip(one).foreach { case ((a, _), (b, _)) =>
+      assert(a.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+      assert(a.collect().toSeq.sortBy(_.toString) ==
+        b.collect().toSeq.sortBy(_.toString))
+    }
+    assert(Rounds.landAll().isEmpty)
+  }
+
+  test("landAll's jobs carry the caller's local properties") {
+    val sc = spark.sparkContext
+    val key = "graft.rounds.spec"
+    val seen = new ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        { seen.add(String.valueOf(j.properties.getProperty(key))); () }
+    }
+    GraftBus.drain(sc)
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, "caller")
+    try {
+      Rounds.landAll(grouped, spark.range(100).toDF())
+      GraftBus.drain(sc)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+    val tags = seen.asScala.toSeq
+    assert(tags.size >= 2 && tags.forall(_ == "caller"), tags)
+  }
+
+  test("landAll rethrows a failure only after the other landing has ended") {
+    val sc = spark.sparkContext
+    val slowId = udf { (x: Long) => Thread.sleep(250); x }
+    val failing = spark.range(10).select(raise_error(lit("landing boom")))
+    val slow = spark.range(0, 8, 1, 4).select(slowId(col("id")).as("id"))
+    val e = intercept[Exception](Rounds.landAll(failing, slow))
+    assert(e.getMessage.contains("landing boom"), e.getMessage)
+    GraftBus.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
   }
 
   test("iterate returns n + 1 landed states whose counts match") {
