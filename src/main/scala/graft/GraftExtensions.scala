@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftshim.Shim
 import graft.expressions.{ByteHistogram, NGramsGenerator, TokenCount}
 
 /** SparkSessionExtensions entry point: registers graft's native functions
-  * for SQL users. Activate with
+  * for SQL users — the `byte_histogram` and `token_count` kernels (each
+  * built by its Column entry point, a `StaticInvoke` call of the kernel
+  * object) and the `ngrams` generator. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`; [[GraftFunctions.register]]
   * covers already-running sessions.
@@ -27,8 +30,10 @@ object GraftFunctions {
 
   private def buildByteHistogram(args: Seq[Expression]): Expression =
     args match {
-      case Seq(child) => ByteHistogram(child, 16)
-      case Seq(child, Literal(bins: Int, _)) => ByteHistogram(child, bins)
+      case Seq(child) =>
+        Shim.expression(ByteHistogram.byte_histogram(Shim.column(child)))
+      case Seq(child, Literal(bins: Int, _)) =>
+        Shim.expression(ByteHistogram.byte_histogram(Shim.column(child), bins))
       case _ => throw new IllegalArgumentException(
         "byte_histogram(bytes[, bins]) — bins must be an integer literal")
     }
@@ -36,19 +41,20 @@ object GraftFunctions {
   val byteHistogramDescriptor: (FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression) = (
     FunctionIdentifier("byte_histogram"),
-    new ExpressionInfo(classOf[ByteHistogram].getName, "byte_histogram"),
+    new ExpressionInfo("graft.expressions.ByteHistogram", "byte_histogram"),
     buildByteHistogram)
 
   private def buildTokenCount(args: Seq[Expression]): Expression =
     args match {
-      case Seq(child) => TokenCount(child)
+      case Seq(child) =>
+        Shim.expression(TokenCount.token_count(Shim.column(child)))
       case _ => throw new IllegalArgumentException("token_count(text)")
     }
 
   val tokenCountDescriptor: (FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression) = (
     FunctionIdentifier("token_count"),
-    new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
+    new ExpressionInfo("graft.expressions.TokenCount", "token_count"),
     buildTokenCount)
 
   private def buildNGrams(args: Seq[Expression]): Expression =

@@ -1,40 +1,26 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: histogram of byte values of a binary column
-  * into `bins` equal-width buckets (bucket = (b & 0xFF) / (256/bins)).
+/** Native kernel: histogram of byte values of a binary column into `bins`
+  * equal-width buckets (bucket = (b & 0xFF) / (256/bins)).
   *
   * This is the feature-extraction kernel of the multimodal column surface
   * (SURVEY.md §2.11 X3): decode/featurize steps over opaque media bytes run
-  * per-row inside whole-stage codegen — `doGenCode` emits a tight primitive
-  * loop, no UDF boxing, no Row allocation. The true media decoders
-  * (image/audio) are deliberately stubbed behind [[graft.ext.Multimodal]]
-  * (no codec libraries ship offline); this expression is the real
-  * Spark-side plumbing they plug into.
+  * per-row inside whole-stage codegen — one tight primitive loop, no UDF
+  * boxing, no Row allocation. The true media decoders (image/audio) are
+  * deliberately stubbed behind [[graft.ext.Multimodal]] (no codec
+  * libraries ship offline); this kernel is the real Spark-side plumbing
+  * they plug into.
   */
-case class ByteHistogram(child: Expression, bins: Int)
-    extends UnaryExpression {
+object ByteHistogram {
 
-  require(bins > 0 && 256 % bins == 0, s"bins must divide 256, got $bins")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"byte_histogram requires BINARY input, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "byte_histogram"
-
-  private val width = 256 / bins
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
+  def histogram(bytes: Array[Byte], bins: Int): ArrayData = {
+    val width = 256 / bins
     val counts = new Array[Long](bins)
     var i = 0
     while (i < bytes.length) {
@@ -44,25 +30,10 @@ case class ByteHistogram(child: Expression, bins: Int)
     new GenericArrayData(counts)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytesVar => {
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      s"""
-         |long[] $counts = new long[$bins];
-         |for (int $i = 0; $i < $bytesVar.length; $i++) {
-         |  $counts[($bytesVar[$i] & 0xFF) / $width]++;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($counts);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ByteHistogram {
   /** Column-API entry point. */
-  def byte_histogram(c: Column, bins: Int = 16): Column =
-    Shim.column(ByteHistogram(Shim.expression(c), bins))
+  def byte_histogram(c: Column, bins: Int = 16): Column = {
+    require(bins > 0 && 256 % bins == 0, s"bins must divide 256, got $bins")
+    Shim.kernel(this, "histogram", ArrayType(LongType, containsNull = false),
+      Seq(BinaryType, IntegerType))(c, lit(bins))
+  }
 }

@@ -1,16 +1,14 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: all `k` min-hashes of a base-hash array in
-  * ONE pass — the Column formulation (`array_min(transform(...))` per
-  * signature) re-traverses the array once per hash function.
+/** Native kernel: all `k` min-hashes of a base-hash array in ONE pass —
+  * the Column formulation (`array_min(transform(...))` per signature)
+  * re-traverses the array once per hash function.
   *
   * The affine family is the fixed portable one the DuckDB oracles mirror:
   * `min_i(((h & Mask) * a(i) + b(i)) mod P)`. Inputs are the full 60-bit
@@ -20,43 +18,6 @@ import org.apache.spark.sql.types._
   * (no overflow on any engine). An empty or null input yields null
   * (matching `array_min(empty) = null` per signature in the Column form).
   */
-case class MinHashSignature(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  require(k >= 1 && k <= 64, s"k in [1,64], got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_signature requires ARRAY<BIGINT> input, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_signature"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val out = MinHashSignature.compute(arr, k)
-    if (out == null) null else new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mins = ctx.freshName("mins")
-    nullSafeCodeGen(ctx, ev, arrVar =>
-      s"""
-         |long[] $mins = graft.expressions.MinHashSignature.compute($arrVar, $k);
-         |if ($mins == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashSignature {
 
   /** 30-bit base-hash mask: keeps every affine product < 2^63 with room. */
@@ -69,7 +30,7 @@ object MinHashSignature {
   /** One pass over the hashes, all k mins tracked simultaneously.
     * Null elements are skipped; no surviving element → null (parity with
     * array_min over an empty array). */
-  def compute(arr: ArrayData, k: Int): Array[Long] = {
+  def compute(arr: ArrayData, k: Int): ArrayData = {
     val mins = Array.fill(k)(Long.MaxValue)
     var any = false
     var i = 0
@@ -87,10 +48,14 @@ object MinHashSignature {
       }
       i += 1
     }
-    if (any) mins else null
+    if (any) new GenericArrayData(mins) else null
   }
 
   /** Column-API entry point. */
-  def minhash_signature(hashes: Column, k: Int): Column =
-    Shim.column(MinHashSignature(Shim.expression(hashes), k))
+  def minhash_signature(hashes: Column, k: Int): Column = {
+    require(k >= 1 && k <= 64, s"k in [1,64], got $k")
+    Shim.kernel(this, "compute", ArrayType(LongType, containsNull = false),
+      Seq(ArrayType(LongType), IntegerType), returnNullable = true)(
+      hashes, lit(k))
+  }
 }

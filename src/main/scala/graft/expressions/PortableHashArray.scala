@@ -3,16 +3,14 @@ package graft.expressions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the portable 60-bit md5 hash of every
-  * element of a string array, in one pass.
+/** Native kernel: the portable 60-bit md5 hash of every element of a
+  * string array, in one pass.
   *
   * Value semantics are EXACTLY `conv(substring(md5(x), 1, 15), 16, 10)
   * ::long & mask` — the cross-engine hash every dedup oracle mirrors as
@@ -22,30 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Column chain pays per element. The digest instance is reused via a
   * ThreadLocal — no per-row allocation. Null elements hash to null.
   */
-case class PortableHashArray(child: Expression, mask: Long)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"portable_hash_array requires ARRAY<STRING> input, got ${other.sql}")
-  }
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = child.dataType
-      .asInstanceOf[ArrayType].containsNull)
-  override def prettyName: String = "portable_hash_array"
-
-  override def nullSafeEval(input: Any): Any =
-    PortableHashArray.hashAll(input.asInstanceOf[ArrayData], mask)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arrVar =>
-      s"${ev.value} = graft.expressions.PortableHashArray.hashAll($arrVar, ${mask}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PortableHashArray {
 
   private val digest = new ThreadLocal[MessageDigest] {
@@ -66,7 +40,7 @@ object PortableHashArray {
     (top >>> 4) & mask
   }
 
-  def hashAll(arr: ArrayData, mask: Long): GenericArrayData = {
+  def hashAll(arr: ArrayData, mask: Long): ArrayData = {
     val n = arr.numElements()
     val out = new Array[Any](n)
     var i = 0
@@ -82,5 +56,6 @@ object PortableHashArray {
   /** Column-API entry point; `mask = -1L >>> 4` (60 bits) for the raw
     * portable hash, [[MinHashSignature.Mask]] for the minhash base. */
   def portable_hash_array(strings: Column, mask: Long): Column =
-    Shim.column(PortableHashArray(Shim.expression(strings), mask))
+    Shim.kernel(this, "hashAll", ArrayType(LongType),
+      Seq(ArrayType(StringType), LongType))(strings, lit(mask))
 }

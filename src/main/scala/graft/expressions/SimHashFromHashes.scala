@@ -1,44 +1,30 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: SimHash over a precomputed token-hash array
-  * — majority vote per bit position over the low `nBits` bits of each
-  * hash, bit set where the vote is strictly positive.
+/** Native kernel: SimHash over a precomputed token-hash array — majority
+  * vote per bit position over the low `nBits` bits of each hash, bit set
+  * where the vote is strictly positive.
   *
   * The Column-expression formulation (`nBits` separate `aggregate` folds)
   * re-traverses the hash array once PER BIT: 60 interpreted lambda passes
-  * per document. This expression makes one pass total inside whole-stage
+  * per document. This kernel makes one pass total inside whole-stage
   * codegen (measured ~4× on the dedup_simhash query at sf0.1). Null
   * elements are skipped; a null array yields null.
   */
-case class SimHashFromHashes(child: Expression, nBits: Int)
-    extends UnaryExpression {
+object SimHashFromHashes {
 
-  require(nBits >= 1 && nBits <= 60,
-    "the portable md5-derived hash carries 60 usable bits")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash requires ARRAY<BIGINT> input, got ${other.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** The per-bit majority vote over the non-null hashes of `hs`. */
+  def vote(hs: ArrayData, nBits: Int): Long = {
     val votes = new Array[Long](nBits)
     var i = 0
-    while (i < arr.numElements()) {
-      if (!arr.isNullAt(i)) {
-        val h = arr.getLong(i)
+    while (i < hs.numElements()) {
+      if (!hs.isNullAt(i)) {
+        val h = hs.getLong(i)
         var j = 0
         while (j < nBits) {
           votes(j) += ((h >>> j) & 1L) * 2L - 1L
@@ -56,37 +42,15 @@ case class SimHashFromHashes(child: Expression, nBits: Int)
     out
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arrVar => {
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-         |long[] $votes = new long[$nBits];
-         |for (int $i = 0; $i < $arrVar.numElements(); $i++) {
-         |  if (!$arrVar.isNullAt($i)) {
-         |    long $h = $arrVar.getLong($i);
-         |    for (int $j = 0; $j < $nBits; $j++) {
-         |      $votes[$j] += (($h >>> $j) & 1L) * 2L - 1L;
-         |    }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < $nBits; $j++) {
-         |  if ($votes[$j] > 0) $out |= 1L << $j;
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SimHashFromHashes {
-  /** Column-API entry point. */
-  def simhash(hashes: Column, nBits: Int): Column =
-    Shim.column(SimHashFromHashes(Shim.expression(hashes), nBits))
+  /** Column-API entry point: the SimHash over the low `nBits` bits of
+    * the portable 60-bit token hashes (nBits <= 60 keeps every band value
+    * positive in a signed long). Land the hash array in its own
+    * projection first — nested lambda expressions defeat Spark's
+    * common-subexpression elimination. */
+  def simhash(hashes: Column, nBits: Int): Column = {
+    require(nBits >= 1 && nBits <= 60,
+      "the portable md5-derived hash carries 60 usable bits")
+    Shim.kernel(this, "vote", LongType,
+      Seq(ArrayType(LongType), IntegerType))(hashes, lit(nBits))
+  }
 }

@@ -1,47 +1,19 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 
-/** Native set-intersection size over two SORTED long arrays: one merge
-  * pass, no per-row hash-set construction. `array_intersect` builds an
-  * OpenHashSet per evaluation — on a verification join running millions
-  * of pairs of ~2k-element signature sets, the merge is the right
-  * algorithm (the arrays are produced sorted once upstream). Duplicate
-  * values are counted once (set semantics, matching `array_intersect`);
-  * null elements are skipped; a null array yields null.
+/** Native kernel: set-intersection size over two SORTED long arrays —
+  * one merge pass, no per-row hash-set construction. `array_intersect`
+  * builds an OpenHashSet per evaluation — on a verification join running
+  * millions of pairs of ~2k-element signature sets, the merge is the
+  * right algorithm (the arrays are produced sorted once upstream).
+  * Duplicate values are counted once (set semantics, matching
+  * `array_intersect`); null elements are skipped; a null array yields
+  * null.
   */
-case class SortedIntersectSize(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sorted_intersect_size requires two ARRAY<BIGINT>, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_size"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectSize.merge(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.SortedIntersectSize.merge($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object SortedIntersectSize {
 
   /** Merge-count of common distinct values in two ascending arrays. */
@@ -68,5 +40,6 @@ object SortedIntersectSize {
   /** Column-API entry point — both arrays MUST be sorted ascending
     * (e.g. via sort_array). */
   def sorted_intersect_size(a: Column, b: Column): Column =
-    Shim.column(SortedIntersectSize(Shim.expression(a), Shim.expression(b)))
+    Shim.kernel(this, "merge", IntegerType,
+      Seq(ArrayType(LongType), ArrayType(LongType)))(a, b)
 }

@@ -1,49 +1,28 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: BPE-ish pre-tokenizer token count — the
-  * number of matches of `[a-z]+|[A-Z]+|[0-9]|[^A-Za-z0-9\s]` — as a single
+/** Native kernel: BPE-ish pre-tokenizer token count — the number of
+  * matches of `[a-z]+|[A-Z]+|[0-9]|[^A-Za-z0-9\s]` — as a single
   * code-point state machine instead of a regex engine pass.
   *
   * Token-counting runs over EVERY document byte in a training pipeline
-  * (quality gates, packing budgets), so it must be scan-speed: `doGenCode`
-  * emits a tight loop inside whole-stage codegen — no Pattern allocation,
-  * no Matcher state, no boxing (measured ~2× on text_token_stats vs
-  * regexp_count; the semantics are pinned to the regex by a property
-  * test in TokenCountSpec).
+  * (quality gates, packing budgets), so it must be scan-speed: the call
+  * runs inside whole-stage codegen ([[Shim.kernel]]) — no Pattern
+  * allocation, no Matcher state, no boxing (measured ~2× on
+  * text_token_stats vs regexp_count; the semantics are pinned to the
+  * regex by a property test in TokenCountSpec).
   */
-case class TokenCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_count requires STRING input, got ${child.dataType.sql}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "token_count"
-
-  override def nullSafeEval(input: Any): Any =
-    TokenCount.count(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, strVar =>
-      s"${ev.value} = graft.expressions.TokenCount.count($strVar.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TokenCount {
 
-  /** The state machine both eval paths share. Classes: lowercase run,
+  /** The state machine both eval paths call. Classes: lowercase run,
     * uppercase run, single-token (digit or symbol), whitespace
     * (`\s` = space, \t, \n, \x0B, \f, \r — the Java/RE2 ASCII set). */
-  def count(s: String): Int = {
+  def count(text: UTF8String): Int = {
+    val s = text.toString
     var cnt = 0
     var prev = -1
     var i = 0
@@ -63,7 +42,7 @@ object TokenCount {
     cnt
   }
 
-  /** Column-API entry point. */
+  /** Column-API entry point (a non-string input is cast to string). */
   def token_count(c: Column): Column =
-    Shim.column(TokenCount(Shim.expression(c)))
+    Shim.kernel(this, "count", IntegerType, Seq(StringType))(c)
 }

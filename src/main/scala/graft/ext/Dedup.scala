@@ -58,7 +58,7 @@ object Dedup {
     * measured 6.7s → ~2s on the LSH query at sf0.1. p prime > 2^30, a_i
     * odd; all arithmetic long-exact and identical in any engine. */
   // Single source of truth for the portable affine family lives beside
-  // the native expression; these aliases keep the oracle-SQL builders
+  // the native kernel; these aliases keep the oracle-SQL builders
   // reading naturally.
   val MinhashMask: Long = graft.expressions.MinHashSignature.Mask
   val MinhashP: Long = graft.expressions.MinHashSignature.P
@@ -102,20 +102,6 @@ object Dedup {
   def lshBands(sig: Seq[Column], r: Int): Seq[Column] =
     sig.grouped(r).toSeq.map(band => md5(concat_ws(",", band.map(_.cast("string")): _*)))
 
-  /** 32-bit SimHash from a precomputed token-hash array: per-bit votes
-    * (+1/-1 per token), bit set where the vote is strictly positive. Land
-    * the hash array in its own projection first (same CSE caveat as
-    * [[minhashBaseHashes]]). */
-  def simhash32FromHashes(hs: Column): Column = simhashFromHashes(hs, 32)
-
-  /** SimHash over the low `nBits` bits of the portable 60-bit token hash
-    * (nBits <= 60 keeps every band value positive in a signed long).
-    * Evaluated by the one-pass codegen'd
-    * [[graft.expressions.SimHashFromHashes]] — the equivalent Column
-    * formulation re-traverses the hash array once per bit. */
-  def simhashFromHashes(hs: Column, nBits: Int): Column =
-    graft.expressions.SimHashFromHashes.simhash(hs, nBits)
-
   /** Banded near-pair plan for Hamming distance — the scale-safe
     * replacement for an all-pairs simhash self-join (Manku et al.,
     * WWW'07). The simhash is split into `bands` slices of `bitsPerBand`
@@ -155,10 +141,6 @@ object Dedup {
         hamming(col("sh_a"), col("sh_b")).as("dist"))
       .filter(col("dist") <= maxDist)
   }
-
-  /** Convenience one-shot 32-bit SimHash over a token array. */
-  def simhash32(toks: Column): Column =
-    simhash32FromHashes(transform(toks, t => TextOps.hash64(t)))
 
   /** Hamming distance between two simhash values (bit-count of XOR). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -274,28 +256,6 @@ object Dedup {
       .join(o.as("e3"),
         col("e1.dst") === col("e3.src") && col("e2.dst") === col("e3.dst"))
       .agg(count(lit(1)).as("n_triangles"))
-  }
-
-  /** Pairwise Jaccard over distinct-token sets via an inverted-index join:
-    * explode tokens, self-join on token, count common tokens per pair, then
-    * |A∩B| / (|A|+|B|-|A∩B|). Shuffles on token then on pair — the
-    * standard candidate-pair plan; at 100 TB the explode output is
-    * bounded by (docs × vocab), and hot tokens (stopwords) should be
-    * pre-filtered by document frequency (see `maxDf` in callers). */
-  def jaccardPairs(docs: DataFrame, idCol: String, tokenSet: Column,
-                   threshold: Double): DataFrame = {
-    val sets = docs.select(col(idCol).as("id"), tokenSet.as("s"))
-      .withColumn("sz", size(col("s")))
-    val inv = sets.select(col("id"), col("sz"), explode(col("s")).as("t"))
-    val pairs = inv.as("a").join(inv.as("b"),
-        col("a.t") === col("b.t") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .agg(count(lit(1)).as("common"))
-    pairs.select(col("id_a"), col("id_b"),
-        (col("common").cast("double") /
-          (col("sz_a") + col("sz_b") - col("common"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
   }
 
   /** DIRECTED containment pairs |A∩B| / |A| ≥ threshold over element sets

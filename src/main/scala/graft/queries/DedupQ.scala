@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.io.Tables
+import graft.expressions.SimHashFromHashes
 import graft.ext.{Dedup, TextOps}
 import graft.util.SharedStage
 
@@ -463,7 +464,7 @@ object DedupQ {
           .withColumn("hs", Dedup.tokenHashes(
             array_distinct(TextOps.tokens(col("text")))))
           .select(col("doc_id"),
-            Dedup.simhashFromHashes(col("hs"), 60).as("simhash"))
+            SimHashFromHashes.simhash(col("hs"), 60).as("simhash"))
         val shp = Dedup.simhashBandPairs(sh0, "doc_id", "simhash",
             bands = 4, bitsPerBand = 15, maxDist = 3)
           .select(col("id_a"), col("id_b"), lit(1L).as("in_sh"))
@@ -525,7 +526,7 @@ object DedupQ {
           .withColumn("hs", Dedup.tokenHashes(
             array_distinct(TextOps.tokens(col("text")))))
           .select(col("doc_id"),
-            Dedup.simhashFromHashes(col("hs"), 60).as("simhash"))
+            SimHashFromHashes.simhash(col("hs"), 60).as("simhash"))
         Dedup.simhashBandPairs(sh, "doc_id", "simhash",
             bands = 4, bitsPerBand = 15, maxDist = 3)
           .orderBy("id_a", "id_b")

@@ -151,7 +151,7 @@ object MultimodalQ {
         |       CAST(ceil(octet_length(encode(text)) / 256.0) AS BIGINT) AS n_frames
         |FROM documents ORDER BY asset_id""".stripMargin),
 
-    // The codegen'd native-expression histogram (16 bins over byte values).
+    // The codegen'd native-kernel histogram (16 bins over byte values).
     "multimodal_byte_histogram" -> QuerySpec(
       (s, d) => {
         val assets = Multimodal.assetTable(Tables.documents(s, d))

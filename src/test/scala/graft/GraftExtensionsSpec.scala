@@ -16,6 +16,15 @@ class GraftExtensionsSpec extends SparkSpec {
       "SELECT byte_histogram(encode(t, 'UTF-8')) AS h FROM ext_t")
       .head().getSeq[Long](0)
     assert(r2.sum == 3)
+    // bins out of range throws the entry point's message; a type Spark
+    // cannot implicitly cast to BINARY fails analysis
+    val bad = intercept[Exception](spark.sql(
+      "SELECT byte_histogram(encode(t, 'UTF-8'), 7) AS h FROM ext_t"))
+    assert(Iterator.iterate[Throwable](bad)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage)
+        .contains("bins must divide 256, got 7")), bad)
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT byte_histogram(array(1)) AS h FROM ext_t"))
   }
 
   test("ngrams generator: lazy UDTF from SQL and the Column API") {

@@ -210,7 +210,7 @@ class PhysicalPlanSpec extends SparkSpec {
     // read an existing RDD — the raw hash expression (ascii folds for
     // aHash, bit votes for simhash) must NOT appear anywhere in it.
     Seq("multimodal_ahash_pairs" -> "ascii(",
-        "dedup_simhash" -> "simhash_from_hashes")
+        "dedup_simhash" -> "SimHashFromHashes.vote(")
       .foreach { case (name, marker) =>
         val p = plan(SparkEntry.registry(name).fn(spark, sf))
         assert(!p.toLowerCase.contains(marker.toLowerCase),
@@ -369,7 +369,7 @@ class PhysicalPlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"adjacency joins must broadcast:\n$p")
-    assert(p.contains("sorted_intersect_size"),
+    assert(p.contains("SortedIntersectSize.merge("),
       s"closing count must be the codegen'd merge, not a join:\n$p")
     // the only hash Exchanges are the two pre-AQE copies of the
     // adjacency keyed agg (one per broadcast side; exchange reuse dedups

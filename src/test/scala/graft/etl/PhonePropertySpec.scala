@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.SparkSpec
-import graft.expressions.PhoneIntl
 
 /** Property-based coverage promised in SURVEY §5.3: the phone normalizer
   * never throws and always produces the documented invariant; surrogate
@@ -31,7 +30,7 @@ class PhonePropertySpec extends SparkSpec {
     /** The lengths table as one map-literal column of bitmasks (bit L
       * set ⇔ NSN length L possible). */
     val NsnLengthMask: Column =
-      map(PhoneIntl.NsnLengths.toSeq.flatMap { case (c, lens) =>
+      map(Phone.NsnLengths.toSeq.flatMap { case (c, lens) =>
         Seq(lit(c), lit(lens.map(l => 1L << l).sum))
       }: _*)
 
@@ -133,7 +132,7 @@ class PhonePropertySpec extends SparkSpec {
 
   /** `"+CC rest"`: a listed or random calling code, then mostly digits. */
   private val possibleInput: Gen[String] = for {
-    cc <- Gen.frequency((3, Gen.oneOf(PhoneIntl.NsnLengths.keys.toSeq)),
+    cc <- Gen.frequency((3, Gen.oneOf(Phone.NsnLengths.keys.toSeq)),
       (2, Gen.chooseNum(0, 4).flatMap(n =>
         Gen.listOfN(n, kernelAlphabet).map(_.mkString))))
     rest <- Gen.chooseNum(0, 16).flatMap(n => Gen.listOfN(n,
@@ -147,22 +146,6 @@ class PhonePropertySpec extends SparkSpec {
       StructField("p", StringType, nullable = true)))
     spark.createDataFrame(spark.sparkContext.parallelize(
       inputs.zipWithIndex.map { case (p, i) => Row(i, p) }, 4), schema)
-  }
-
-  /** `body` under whole-stage codegen (compile errors fail, no silent
-    * fallback) or under interpreted evaluation only. */
-  private def evalPath[T](codegen: Boolean)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.codegen.wholeStage" -> codegen.toString,
-      "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
-      "spark.sql.codegen.fallback" -> "false")
-    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   private def usesCodegen(df: DataFrame): Boolean =

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.expressions.ByteHistogram
+import graft.expressions.{ByteHistogram, SimHashFromHashes}
 
 class ExtSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +38,8 @@ class ExtSpec extends SparkSpec {
       ("a", Seq("k1", "k2", "k3", "k4", "k5", "k6")),
       ("b", Seq("k1", "k2", "k3", "k4", "k5", "k7")),
       ("c", Seq("z1", "z2", "z3", "z4", "z5", "z6"))).toDF("id", "s")
-    val r = df.select(col("id"), Dedup.simhash32(col("s")).as("h"))
+    val hs = transform(col("s"), t => TextOps.hash64(t))
+    val r = df.select(col("id"), SimHashFromHashes.simhash(hs, 32).as("h"))
       .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
     def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
     assert(ham(r("a"), r("a")) == 0)
@@ -56,14 +57,16 @@ class ExtSpec extends SparkSpec {
   }
 
   test("byte histogram: counts sum to length, known bins, null passthrough") {
-    val df = Seq(Some("abc"), Some(""), None)
-      .toDF("t").select(encode(col("t"), "UTF-8").as("b"))
-    val got = df.select(ByteHistogram.byte_histogram(col("b"), 16).as("h"))
-      .collect().map(r => Option(r.getSeq[Long](0)))
-    assert(got(0).get.sum == 3)
-    assert(got(0).get(6) == 3) // 'a'=97,'b'=98,'c'=99 → bin 6
-    assert(got(1).get.sum == 0)
-    assert(got(2).isEmpty)
+    bothEvalPaths {
+      val df = Seq(Some("abc"), Some(""), None)
+        .toDF("t").select(encode(col("t"), "UTF-8").as("b"))
+      val got = df.select(ByteHistogram.byte_histogram(col("b"), 16).as("h"))
+        .collect().map(r => Option(r.getSeq[Long](0)))
+      assert(got(0).get.sum == 3)
+      assert(got(0).get(6) == 3) // 'a'=97,'b'=98,'c'=99 → bin 6
+      assert(got(1).get.sum == 0)
+      assert(got(2).isEmpty)
+    }
   }
 
   test("connected components: two clusters + a bridge collapse to min labels") {
@@ -192,18 +195,6 @@ class ExtSpec extends SparkSpec {
     assert(out(1L).samples.sameElements(want))
     assert(out(1L).samples(0) == ('a'.toInt - 96) * 256)
     assert(out(2L).samples.forall(_ == 0), "empty doc is silence")
-  }
-
-  test("jaccard pairs: exact value on a known overlap") {
-    val df = Seq(
-      (1L, Seq("a", "b", "c", "d")),
-      (2L, Seq("a", "b", "c", "e")),
-      (3L, Seq("x", "y", "z", "w"))).toDF("doc_id", "s")
-    val pairs = Dedup.jaccardPairs(df, "doc_id", col("s"), threshold = 0.5)
-      .collect()
-    assert(pairs.length == 1)
-    assert(pairs(0).getLong(0) == 1L && pairs(0).getLong(1) == 2L)
-    assert(pairs(0).getDouble(2) == 3.0 / 5.0)
   }
 
   test("triangle count is immune to self-loops, dup edges, and reversed edges") {
