@@ -56,7 +56,18 @@ object Bench {
     // flag it; consumers then rebuild the stage inside their own timing
     // (the cache-miss path) — their numbers read high rather than the
     // failure reading fast, which is the right failure direction.
-    val sharedResults = SparkEntry.sharedStages.map { st =>
+    // Dev-only prefix filter for targeted re-benching of a few entries
+    // (mirrors Verify's SPARK_GRAFT_ONLY). It selects shared stages by
+    // the same prefixes, since stage names are entry names: a selected
+    // query whose stage is not selected builds it inside its own timing
+    // (the cache-miss path again). With it unset (the official full
+    // run), every stage and query is timed; a partial sweep does NOT
+    // overwrite BENCH_DETAIL.json so a dev loop can't shrink the
+    // committed full-coverage medians.
+    val only = SparkEntry.onlyPrefixes(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = SparkEntry.selected(only) _
+    val stages = SparkEntry.sharedStages.filter(st => selected(st.name))
+    val sharedResults = stages.map { st =>
       st.name -> median((1 to runsN).map(_ =>
         timed(st.name)(st.rebuild(spark, sfDir))._2))
     }
@@ -66,16 +77,9 @@ object Bench {
     // expression-heavy queries). Every query below executes fully inside
     // its own timing window, except that dedup/graph consumers reuse the
     // pre-built shared stage above (charged to its own entry).
-    // Dev-only prefix filter for targeted re-benching of a few queries
-    // (mirrors Verify's SPARK_GRAFT_ONLY). The official driver run leaves
-    // it unset; a partial sweep does NOT overwrite BENCH_DETAIL.json so a
-    // dev loop can't shrink the committed full-coverage medians.
-    val only = SparkEntry.onlyPrefixes(sys.env.get("SPARK_GRAFT_ONLY"))
     def sweep(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq
-        .filter { case (name, _) =>
-          only.forall(_.exists(name.startsWith))
-        }
+        .filter { case (name, _) => selected(name) }
         .map { case (name, fn) =>
           timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
         }

@@ -36,4 +36,10 @@ object SparkEntry {
     * trimmed, blanks dropped; None when unset (every entry selected). */
   def onlyPrefixes(v: Option[String]): Option[Seq[String]] =
     v.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** Whether an entry (a query or a shared stage: stage names are entry
+    * names) is selected by [[onlyPrefixes]]' value: every entry when
+    * None, else those starting with one of the prefixes. */
+  def selected(only: Option[Seq[String]])(name: String): Boolean =
+    only.forall(_.exists(name.startsWith))
 }

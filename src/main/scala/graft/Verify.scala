@@ -28,8 +28,7 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/SUBSET_MARKER.json"),
         prefixes.map(p => "\"" + p + "\"").mkString("[", ",", "]"))
     }
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
+    val selected = SparkEntry.selected(only) _
     // SPARK_GRAFT_METRICS=1: per-query shuffle-spill attribution for the
     // constrained-heap gate (r14) — a cumulative task-metrics listener,
     // snapshotted around each query (queries run sequentially, so the

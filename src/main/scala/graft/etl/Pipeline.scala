@@ -11,18 +11,24 @@ import graft.ops.Rounds
   * from the source files. Output: the four conformed tables the reference
   * loads into MySQL.
   *
-  * `run` is not lazy: like the reference, which conforms each source once
-  * in memory before loading it (insert.py:93-129), it lands the conformed
-  * contacts and the conformed contracts with [[graft.ops.Rounds.landAll]]:
-  * two eager jobs that run at the same time, each on its own thread with
-  * the caller's local properties, so the one-split contacts landing and
-  * the contracts landing share the cores instead of queueing. If either
-  * landing fails, `run` waits for the other to end and then rethrows the
-  * first failure (contacts before contracts); no `Output` is returned,
-  * and the landed blocks of the other source are left for the cleaner.
-  * Every [[Output]] frame is planned over those landed blocks, so each
-  * audit or sink reads them instead of re-reading the CSVs and re-running
-  * the conform (phone included) per consumer. The trade is the one
+  * `run` is not lazy. Like the reference, which conforms each source
+  * once in memory and then loads its tables (insert.py:93-129,169-191),
+  * it lands in two phases, each with [[graft.ops.Rounds.landAll]]: the
+  * frames of a phase land as concurrent jobs, each on its own thread
+  * with the caller's local properties, so they share the cores instead
+  * of queueing.
+  *  1. The conformed contacts and the conformed contracts (the one-split
+  *     contacts landing carries the phone conform).
+  *  2. Over those blocks, the two deduped outputs: `entities` (the
+  *     union with the relation endpoints and its dedup shuffle) and the
+  *     reshaped, keep-first-deduped `contacts` (its window shuffle).
+  * If a landing fails, `run` waits for the rest of its phase to end and
+  * then rethrows the first failure in phase order; no `Output` is
+  * returned, and blocks already landed are left for the cleaner.
+  * `Output.entities` and `Output.contacts` are bare landed leaves, so
+  * each dedup shuffle runs once per `run`, however many audits and sinks
+  * read them; `contracts` and `relations` are projections (over the
+  * landed contracts and over the raw relations). The trade is the one
   * `Rounds` makes: the landed blocks have no lineage, so an executor lost
   * after `run` fails the later audit or sink, and the pipeline must be
   * rerun from `run`. The blocks are freed by Spark's context cleaner once
@@ -38,13 +44,16 @@ import graft.ops.Rounds
   *  - phone validity is the NSN-length reduction of libphonenumber's
   *    `is_possible_number` (see [[Phone]]).
   *
-  * Plan shape at scale: two concurrent landing jobs (scan →
-  * partition-local conform/id columns); over the landed blocks, one
-  * union with the relation endpoints → one dedup shuffle for
-  * `entities`, one keep-first window shuffle for `contacts`, none for
-  * `contracts`. The landed blocks are executor block storage (memory,
-  * spilling to local disk). The reference's O(n²) row-by-row Python
-  * loops (insert.py:134-166) do not exist here.
+  * Plan shape at scale: four landing jobs in two concurrent phases.
+  * Phase 1 is two scans, each with partition-local conform and id
+  * columns. Phase 2 is one union with the relation endpoints and one
+  * dedup shuffle for `entities`, and one keep-first window shuffle for
+  * `contacts`. `contracts` needs no shuffle. The landed blocks are
+  * executor block storage (memory, spilling to local disk). Nothing
+  * reachable after `run` reads the landed phase-1 contacts, so the
+  * cleaner may free them then; the landed contracts go with the
+  * `Output`. The reference's O(n²) row-by-row Python loops
+  * (insert.py:134-166) do not exist here.
   */
 object Pipeline {
 
@@ -85,7 +94,7 @@ object Pipeline {
 
     // entities = contacts ∪ contracts ∪ relation endpoints, deduped on the
     // natural key (one shuffle; see scaladoc).
-    val entities = contacts.select(entityCols.map(col): _*)
+    val entitiesDeduped = contacts.select(entityCols.map(col): _*)
       .unionByName(contracts.select(entityCols.map(col): _*))
       .unionByName(Relations.endpointEntities(relations))
       .dropDuplicates("entity_id")
@@ -96,11 +105,16 @@ object Pipeline {
     // the dimension is deduped keep-first under a total order (the same
     // dedup the reference's uuid4-per-row scheme silently avoided while
     // violating its own dedup intent; SURVEY §2.4 BUG-1).
-    val contactsOut = {
+    val contactsDeduped = {
       val reshaped = contacts.drop("name", "first_name", "birthday", "entity_type")
       val order = reshaped.columns.filterNot(_ == "entity_id").map(col).toSeq
       Identity.dedupFirst(reshaped, Seq("entity_id"), order)
     }
+
+    // Second phase: both dedups landed once, at the same time, so each
+    // shuffle runs once per pass however many audits and sinks read it.
+    val Seq((entities, _), (contactsOut, _)) =
+      Rounds.landAll(entitiesDeduped, contactsDeduped)
 
     Output(
       entities = entities,

@@ -9,12 +9,13 @@ import graft.io.{Readers, Writers, Xlsx}
   *     <relations.xlsx|.csv> <outDir>
   *
   * Reads the three sources (semicolon CSV × 2 + first-sheet XLSX), runs
-  * [[Pipeline]] (which conforms and lands contacts and contracts once, two
-  * eager jobs), asserts the primary keys the reference declared as DDL,
+  * [[Pipeline]] (four eager landing jobs in two concurrent phases: the
+  * conformed contacts and contracts, then the deduped entities and
+  * contacts), asserts the primary keys the reference declared as DDL,
   * and writes the four conformed tables as parquet under <outDir>. The
-  * three audits and four sinks read the landed blocks, not the CSVs; a
-  * lost executor fails the audit or sink that needed its blocks, and the
-  * whole run must be repeated.
+  * three audits and four sinks read the landed blocks, not the CSVs, and
+  * repeat neither dedup; a lost executor fails the audit or sink that
+  * needed its blocks, and the whole run must be repeated.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {

@@ -3,7 +3,7 @@ package graft
 import graft.util.{SessionScopedCache, SharedStage}
 
 /** The declared shared-stage list, one stage's cache contract, and the
-  * `SPARK_GRAFT_ONLY` parser Bench and Verify share. */
+  * `SPARK_GRAFT_ONLY` parser and selection Bench and Verify share. */
 class SharedStageSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
@@ -58,5 +58,24 @@ class SharedStageSpec extends SparkSpec {
     // set but blank: an empty selection, not the whole registry
     assert(SparkEntry.onlyPrefixes(Some("")).contains(Seq.empty))
     assert(SparkEntry.onlyPrefixes(Some(" , ")).contains(Seq.empty))
+  }
+
+  test("SPARK_GRAFT_ONLY selects shared stages by the same prefixes") {
+    val stages = SparkEntry.sharedStages.map(_.name)
+    def pick(v: Option[String]) =
+      stages.filter(SparkEntry.selected(SparkEntry.onlyPrefixes(v)))
+    // unset: a full run times every stage
+    assert(pick(None) == stages && stages.size == 11)
+    // a query that reads no stage selects none
+    assert(pick(Some("agg_pricing_summary")).isEmpty)
+    assert(pick(Some("graph_")) ==
+      Seq("graph_edges_shared_stage", "graph_lpa_shared_labels"))
+    assert(pick(Some("events_,text_bpe")) ==
+      Seq("text_bpe_shared_train", "events_sliced_fixture"))
+    assert(pick(Some("")).isEmpty)
+    // queries go through the same predicate
+    val only = SparkEntry.onlyPrefixes(Some("graph_kcore"))
+    assert(SparkEntry.selected(only)("graph_kcore"))
+    assert(!SparkEntry.selected(only)("graph_pagerank_copurchase"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -106,17 +107,19 @@ class PipelineSpec extends SparkSpec {
 
   test("no output frame rescans a source: contacts and contracts are landed") {
     val sources = Set("contacts.csv", "contrats.csv")
-    Seq("entities" -> (out.entities, 2), "contacts" -> (out.contacts, 1),
-        "contracts" -> (out.contracts, 1)).foreach {
-      case (name, (df, landed)) =>
-        val plan = df.queryExecution.optimizedPlan
-        val scanned = plan.collect { case r: LogicalRelation => r.relation }
-          .collect { case h: HadoopFsRelation => h.location.rootPaths }
-          .flatten.map(_.getName)
-        assert(scanned.forall(f => !sources.contains(f)),
-          s"$name rescans a source: $scanned\n$plan")
-        assert(plan.collect { case r: LogicalRDD => r }.size == landed,
-          s"$name: want $landed landed leaves\n$plan")
+    Seq("entities" -> out.entities, "contacts" -> out.contacts,
+        "contracts" -> out.contracts).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val scanned = plan.collect { case r: LogicalRelation => r.relation }
+        .collect { case h: HadoopFsRelation => h.location.rootPaths }
+        .flatten.map(_.getName)
+      assert(scanned.forall(f => !sources.contains(f)),
+        s"$name rescans a source: $scanned\n$plan")
+      // the entities and contacts dedups ran once, inside run
+      val dedups = plan.collect { case a: Aggregate => a; case w: Window => w }
+      assert(dedups.isEmpty, s"$name re-runs a dedup per consumer\n$plan")
+      assert(plan.collect { case r: LogicalRDD => r }.size == 1,
+        s"$name: want 1 landed leaf\n$plan")
     }
   }
 
